@@ -2,7 +2,8 @@
 
 Each loader is read → transform → validate → (DataFrame, warnings) — pure
 logical-plan construction; the caller decides write mode (overwrite/append,
-SURVEY S9/S10) and the write layout. Error channels follow SURVEY §2.6:
+SURVEY S9/S10), and plans.pipeline.TABLES gives each table's write layout
+and primary-key policy. Error channels follow SURVEY §2.6:
 hard aborts raise before any write (V1/V2), skip/warn channels return
 counted side-DataFrames (V3/V4).
 
@@ -34,9 +35,6 @@ from ..sources import io, obo, text_sources
 class LoadResult:
     df: DataFrame
     warnings: dict[str, DataFrame] = field(default_factory=dict)
-
-    def warning_counts(self) -> dict[str, int]:
-        return {k: v.count() for k, v in self.warnings.items()}
 
 
 # ---------------------------------------------------------------------------
@@ -148,8 +146,9 @@ def load_synteny_blocks(spark: SparkSession, path: str) -> LoadResult:
     'ID=SynBlock' (V2 abort :70), strand → boolean (P5 :95), symbol =
     block_id minus 'ID=' (P4 :101), swap chr/taxon input order into
     taxon-first output (P1 :100-101), then insert forward AND reversed
-    (X3 :100-115) with INSERT OR REPLACE last-write-wins on the PK
-    (X5 :83-88) — order-insensitive here, so dropDuplicates.
+    (X3 :100-115). Rows may repeat a PK: the INSERT OR REPLACE
+    last-write-wins (X5 :83-88) is the syntenic_block key policy in
+    plans.pipeline.TABLES, applied once to the union of all files.
     """
     raw = text_sources.read_headerless_tsv(spark, path, schemas.SYNTENY_TSV_RAW)
     bad = raw.filter(
@@ -181,7 +180,7 @@ def load_synteny_blocks(spark: SparkSession, path: str) -> LoadResult:
             "ref_end_pos": "comp_end_pos",
         },
     )
-    return LoadResult(io.upsert_dedup(both, schemas.SYNTENIC_BLOCK_PK))
+    return LoadResult(both)
 
 
 # ---------------------------------------------------------------------------
@@ -289,13 +288,14 @@ def load_variants(spark: SparkSession, path: str, taxon_id: int = 9606) -> LoadR
 
 
 def load_homologs(spark: SparkSession, path: str) -> LoadResult:
-    """Headered TSV → symmetric homolog rows + count.
+    """Headered TSV → symmetric homolog rows.
 
     src/import_homologs.py:88-150: header contract (V5 :97-103 — raises),
     extra-column warn (V4 :105-108), non-ORTHOLOGUE type warn-and-keep
     (V4 :129-132, implementing the *intended* warning — Q3), chr strip
-    case-insensitive (P3 :123-127), symmetric duplication (X3 :134-142),
-    INSERT OR REPLACE last-write-wins (X5 :114).
+    case-insensitive (P3 :123-127), symmetric duplication (X3 :134-142).
+    The INSERT OR REPLACE last-write-wins (X5 :114) is the homolog key
+    policy in plans.pipeline.TABLES, applied to the union of all files.
     """
     raw, hdr_warnings = text_sources.read_headered_tsv(
         spark, path, schemas.HOMOLOG_TSV_COLUMNS
@@ -326,8 +326,7 @@ def load_homologs(spark: SparkSession, path: str) -> LoadResult:
             "ref_end": "comp_end",
         },
     )
-    deduped = io.upsert_dedup(both, schemas.HOMOLOG_PK)
-    return LoadResult(deduped, {"non_orthologue_type": non_ortho, **hdr_warnings})
+    return LoadResult(both, {"non_orthologue_type": non_ortho, **hdr_warnings})
 
 
 # ---------------------------------------------------------------------------

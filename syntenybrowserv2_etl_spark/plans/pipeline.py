@@ -8,20 +8,25 @@ Spark jobs (submitted from threads — the scheduler interleaves their
 stages), and any validation failure fails the whole build (fail-fast,
 SURVEY §3.1 decision).
 
-Write layout (the index-emulation story, SURVEY §4): genomic tables are
-partitioned by taxon and sorted within files by (chr, start) so partition
-pruning + parquet row-group min/max stats serve the reference's 15 B-tree
-indexes' query workload.
+``TABLES`` is the one statement of how each output table is written: its
+partition column, its in-file sort columns and its primary-key policy.
+Genomic tables are partitioned by taxon and sorted within files by
+(chr, start) so partition pruning + parquet row-group min/max stats serve
+the reference's 15 B-tree indexes' query workload (SURVEY §4). Every write
+— ``build_database`` and the per-loader CLI alike — goes through
+``write_tables``, which applies that catalogue.
 """
 
 from __future__ import annotations
 
 import concurrent.futures as cf
 import os
-from dataclasses import dataclass
+from dataclasses import dataclass, field
+from typing import Literal
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
+from ..operators import shape
 from ..sources import io
 from .. import schemas
 from . import loaders
@@ -45,145 +50,148 @@ class PipelineInputs:
     gaf_loads: list[tuple[str, int]]
 
 
+# ---------------------------------------------------------------------------
+# Table catalogue
+# ---------------------------------------------------------------------------
+
+
+@dataclass(frozen=True)
+class TablePlan:
+    """How one output table is written.
+
+    ``key`` is the policy for rows sharing ``pk``: ``"unique"`` aborts the
+    load (X6, src/import_genes_exons.py:120-136), ``"dedup"`` keeps one
+    (INSERT OR REPLACE last-write-wins, X5 — applied once to the union of
+    all the family's files, since their order carries no meaning here).
+    """
+
+    partition_by: str | None = None
+    sort_within_by: tuple[str, ...] = ()
+    key: Literal["none", "unique", "dedup"] = "none"
+    pk: list[str] = field(default_factory=list)
+
+
+TABLES: dict[str, TablePlan] = {
+    "gene": TablePlan("gene_taxonid", ("gene_chr", "gene_start_pos"), "unique", schemas.GENE_PK),
+    "exon": TablePlan("taxonid", ("exon_chr", "exon_start_pos"), "unique", schemas.EXON_PK),
+    "syntenic_block": TablePlan(
+        "ref_taxonid", ("ref_chr", "ref_start_pos"), "dedup", schemas.SYNTENIC_BLOCK_PK
+    ),
+    "cytogenetic_band": TablePlan("taxon_id", ("chr", "start")),
+    "feature": TablePlan("taxon_id", ("seq_id", "start")),
+    "snp_variant": TablePlan("taxon_id", ("chr", "pos")),
+    "homolog": TablePlan(
+        "ref_taxon_id", ("ref_seq_id", "ref_start"), "dedup", schemas.HOMOLOG_PK
+    ),
+    "on_terms": TablePlan(),
+    "on_pairs": TablePlan(sort_within_by=("parent", "child")),
+    "gene_ontology_map": TablePlan(),
+}
+
+
+def write_tables(
+    tables: dict[str, DataFrame], out_dir: str, mode: str = "overwrite"
+) -> dict[str, int]:
+    """Write a family's tables under ``out_dir`` by their ``TABLES`` plans;
+    returns {table: rows written}.
+
+    Every key check of the family runs before its first write, so a
+    duplicate key leaves none of the family's tables written (V2).
+    """
+    planned = []
+    for name, df in tables.items():
+        plan = TABLES[name]
+        if plan.key == "unique":
+            io.assert_no_duplicates(df, plan.pk, name)
+        elif plan.key == "dedup":
+            df = io.upsert_dedup(df, plan.pk)
+        planned.append((name, plan, df))
+    return {
+        name: io.write_table(
+            df,
+            f"{out_dir}/{name}",
+            mode=mode,
+            partition_by=[plan.partition_by] if plan.partition_by else None,
+            sort_within_by=list(plan.sort_within_by),
+        )
+        for name, plan, df in planned
+    }
+
+
+# ---------------------------------------------------------------------------
+# Table families — one per reference loader program. Each takes the loader's
+# arguments after ``spark``, one tuple per source file, and returns
+# {table: DataFrame}. Loaders are looked up on the module at call time.
+# ---------------------------------------------------------------------------
+
+
+def genes_exons(spark: SparkSession, loads: list[tuple]) -> dict[str, DataFrame]:
+    pairs = [loaders.load_genes_exons(spark, *args) for args in loads]
+    return {
+        "gene": shape.accumulate([g.df for g, _ in pairs]),
+        "exon": shape.accumulate([e.df for _, e in pairs]),
+    }
+
+
+def ontology(spark: SparkSession, loads: list[tuple]) -> dict[str, DataFrame]:
+    """One load, ``(obo_paths, gaf_loads)``: all OBO files close into ONE
+    global is_a graph (Q9), so the family is never split per file."""
+    [(obo_paths, gaf_loads)] = loads
+    terms, pairs, gmap = loaders.build_ontology(spark, obo_paths, gaf_loads)
+    return {"on_terms": terms.df, "on_pairs": pairs.df, "gene_ontology_map": gmap.df}
+
+
+def _single_table(table: str, loader: str):
+    def family(spark: SparkSession, loads: list[tuple]) -> dict[str, DataFrame]:
+        load = getattr(loaders, loader)
+        return {table: shape.accumulate([load(spark, *args).df for args in loads])}
+
+    return family
+
+
+# CLI subcommand → family builder; each stands for one reference program
+# (import_genes_exons.py, import_synteny_blocks.py, import_cytogenetic_loc.py,
+# import_features.py, import_variants.py, import_homologs.py,
+# import_ontology.py).
+FAMILIES = {
+    "genes-exons": genes_exons,
+    "synteny-blocks": _single_table("syntenic_block", "load_synteny_blocks"),
+    "cytobands": _single_table("cytogenetic_band", "load_cytobands"),
+    "features": _single_table("feature", "load_features"),
+    "variants": _single_table("snp_variant", "load_variants"),
+    "homologs": _single_table("homolog", "load_homologs"),
+    "ontology": ontology,
+}
+
+
 def build_database(spark: SparkSession, inputs: PipelineInputs, out_dir: str) -> dict[str, int]:
     """Build all nine tables under ``out_dir``; returns row counts."""
     os.makedirs(out_dir, exist_ok=True)
+    species = inputs.species
+    loads = {
+        "genes-exons": [(sp.genes_gff3, sp.taxon_id) for sp in species],
+        "synteny-blocks": [(p,) for p in inputs.synteny_tsvs],
+        "cytobands": [(sp.cytoband_gff3, sp.taxon_id) for sp in species if sp.cytoband_gff3],
+        "features": [(sp.feature_gff3, sp.taxon_id) for sp in species if sp.feature_gff3],
+        "variants": [(p,) for p in inputs.vcf_paths],
+        "homologs": [(p,) for p in inputs.homolog_tsvs],
+        "ontology": [(inputs.obo_paths, inputs.gaf_loads)] if inputs.obo_paths else [],
+    }
+
+    def family(cmd: str) -> dict[str, int]:
+        if not loads[cmd]:
+            return {}
+        return write_tables(FAMILIES[cmd](spark, loads[cmd]), out_dir)
+
     results: dict[str, int] = {}
-
-    def genes_exons() -> list[tuple[str, int]]:
-        gene_parts, exon_parts, warn = [], [], []
-        for sp in inputs.species:
-            g, e = loaders.load_genes_exons(spark, sp.genes_gff3, sp.taxon_id)
-            gene_parts.append(g.df)
-            exon_parts.append(e.df)
-        from ..operators import shape
-
-        gene = shape.accumulate(gene_parts)
-        exon = shape.accumulate(exon_parts)
-        io.assert_no_duplicates(gene, schemas.GENE_PK, "gene")
-        io.assert_no_duplicates(exon, schemas.EXON_PK, "exon")
-        n_gene = io.write_table(
-            gene,
-            f"{out_dir}/gene",
-            partition_by=["gene_taxonid"],
-            sort_within_by=["gene_chr", "gene_start_pos"],
-        )
-        n_exon = io.write_table(
-            exon,
-            f"{out_dir}/exon",
-            partition_by=["taxonid"],
-            sort_within_by=["exon_chr", "exon_start_pos"],
-        )
-        return [("gene", n_gene), ("exon", n_exon)]
-
-    def synteny() -> list[tuple[str, int]]:
-        from ..operators import shape
-
-        parts = [loaders.load_synteny_blocks(spark, p).df for p in inputs.synteny_tsvs]
-        df = io.upsert_dedup(shape.accumulate(parts), schemas.SYNTENIC_BLOCK_PK)
-        n = io.write_table(
-            df,
-            f"{out_dir}/syntenic_block",
-            partition_by=["ref_taxonid"],
-            sort_within_by=["ref_chr", "ref_start_pos"],
-        )
-        return [("syntenic_block", n)]
-
-    def cytobands() -> list[tuple[str, int]]:
-        from ..operators import shape
-
-        parts = [
-            loaders.load_cytobands(spark, sp.cytoband_gff3, sp.taxon_id).df
-            for sp in inputs.species
-            if sp.cytoband_gff3
-        ]
-        if not parts:
-            return []
-        df = shape.accumulate(parts)
-        n = io.write_table(
-            df,
-            f"{out_dir}/cytogenetic_band",
-            partition_by=["taxon_id"],
-            sort_within_by=["chr", "start"],
-        )
-        return [("cytogenetic_band", n)]
-
-    def features() -> list[tuple[str, int]]:
-        from ..operators import shape
-
-        parts = [
-            loaders.load_features(spark, sp.feature_gff3, sp.taxon_id).df
-            for sp in inputs.species
-            if sp.feature_gff3
-        ]
-        if not parts:
-            return []
-        df = shape.accumulate(parts)
-        n = io.write_table(
-            df,
-            f"{out_dir}/feature",
-            partition_by=["taxon_id"],
-            sort_within_by=["seq_id", "start"],
-        )
-        return [("feature", n)]
-
-    def variants() -> list[tuple[str, int]]:
-        from ..operators import shape
-
-        parts = [loaders.load_variants(spark, p).df for p in inputs.vcf_paths]
-        if not parts:
-            return []
-        df = shape.accumulate(parts)
-        n = io.write_table(
-            df,
-            f"{out_dir}/snp_variant",
-            partition_by=["taxon_id"],
-            sort_within_by=["chr", "pos"],
-        )
-        return [("snp_variant", n)]
-
-    def homologs() -> list[tuple[str, int]]:
-        from ..operators import shape
-
-        parts = [loaders.load_homologs(spark, p).df for p in inputs.homolog_tsvs]
-        if not parts:
-            return []
-        df = io.upsert_dedup(shape.accumulate(parts), schemas.HOMOLOG_PK)
-        n = io.write_table(
-            df,
-            f"{out_dir}/homolog",
-            partition_by=["ref_taxon_id"],
-            sort_within_by=["ref_seq_id", "ref_start"],
-        )
-        return [("homolog", n)]
-
-    def ontology() -> list[tuple[str, int]]:
-        if not inputs.obo_paths:
-            return []
-        terms, pairs, gmap = loaders.build_ontology(
-            spark, inputs.obo_paths, inputs.gaf_loads
-        )
-        n_terms = io.write_table(terms.df, f"{out_dir}/on_terms")
-        n_pairs = io.write_table(
-            pairs.df, f"{out_dir}/on_pairs", sort_within_by=["parent", "child"]
-        )
-        n_gmap = io.write_table(gmap.df, f"{out_dir}/gene_ontology_map")
-        return [
-            ("on_terms", n_terms),
-            ("on_pairs", n_pairs),
-            ("gene_ontology_map", n_gmap),
-        ]
-
-    tasks = [genes_exons, synteny, cytobands, features, variants, homologs, ontology]
     # Independent table families run concurrently: Spark's FAIR-ish FIFO
     # scheduler interleaves their stages across the executor pool. Any
     # exception cancels the build (fail-fast — unlike the reference shell,
     # which ignores loader failures).
-    with cf.ThreadPoolExecutor(max_workers=len(tasks)) as pool:
-        futures = [pool.submit(t) for t in tasks]
+    with cf.ThreadPoolExecutor(max_workers=len(loads)) as pool:
+        futures = [pool.submit(family, cmd) for cmd in loads]
         for fut in cf.as_completed(futures):
-            for name, n in fut.result():
-                results[name] = n
+            results.update(fut.result())
     return results
 
 
@@ -217,13 +225,11 @@ def main(argv: list[str] | None = None) -> dict[str, int]:
             help="(re)create the table: overwrite instead of append",
         )
 
-    add("genes-exons", True)       # import_genes_exons.py
-    add("cytobands", True)         # import_cytogenetic_loc.py
-    add("features", True)          # import_features.py
-    add("variants", True)          # import_variants.py
-    add("synteny-blocks", False)   # import_synteny_blocks.py
-    add("homologs", False)         # import_homologs.py
-    onto = sub.add_parser("ontology")  # import_ontology.py
+    for name in ("genes-exons", "cytobands", "features", "variants"):
+        add(name, True)
+    for name in ("synteny-blocks", "homologs"):
+        add(name, False)
+    onto = sub.add_parser("ontology")
     onto.add_argument("database")
     onto.add_argument("--obo", action="append", default=[], metavar="OBO_PATH")
     onto.add_argument(
@@ -232,49 +238,19 @@ def main(argv: list[str] | None = None) -> dict[str, int]:
     onto.add_argument("-c", "--create", action="store_true")
     args = p.parse_args(argv)
 
+    if args.cmd == "ontology":
+        gaf_loads = [(path, int(taxon)) for path, taxon in (s.rsplit(":", 1) for s in args.gaf)]
+        load = (args.obo, gaf_loads)
+    elif "taxonid" in args:
+        load = (args.filepath, args.taxonid)
+    else:
+        load = (args.filepath,)
+
     from ..session import get_spark
 
     spark = get_spark("pipeline-cli")
     mode = "overwrite" if args.create else "append"
-    out = args.database
-    written: dict[str, int] = {}
-
-    def emit(name: str, df, partition_by=None, sort_within_by=None) -> None:
-        written[name] = io.write_table(
-            df, f"{out}/{name}", mode=mode,
-            partition_by=partition_by, sort_within_by=sort_within_by,
-        )
-
-    if args.cmd == "genes-exons":
-        g, e = loaders.load_genes_exons(spark, args.filepath, args.taxonid)
-        io.assert_no_duplicates(g.df, schemas.GENE_PK, "gene")
-        io.assert_no_duplicates(e.df, schemas.EXON_PK, "exon")
-        emit("gene", g.df, ["gene_taxonid"], ["gene_chr", "gene_start_pos"])
-        emit("exon", e.df, ["taxonid"], ["exon_chr", "exon_start_pos"])
-    elif args.cmd == "cytobands":
-        res = loaders.load_cytobands(spark, args.filepath, args.taxonid)
-        emit("cytogenetic_band", res.df, ["taxon_id"], ["chr", "start"])
-    elif args.cmd == "features":
-        res = loaders.load_features(spark, args.filepath, args.taxonid)
-        emit("feature", res.df, ["taxon_id"], ["seq_id", "start"])
-    elif args.cmd == "variants":
-        res = loaders.load_variants(spark, args.filepath, args.taxonid)
-        emit("snp_variant", res.df, ["taxon_id"], ["chr", "pos"])
-    elif args.cmd == "synteny-blocks":
-        res = loaders.load_synteny_blocks(spark, args.filepath)
-        emit("syntenic_block", res.df, ["ref_taxonid"], ["ref_chr", "ref_start_pos"])
-    elif args.cmd == "homologs":
-        res = loaders.load_homologs(spark, args.filepath)
-        emit("homolog", res.df, ["ref_taxon_id"], ["ref_seq_id", "ref_start"])
-    elif args.cmd == "ontology":
-        gaf_loads = []
-        for spec in args.gaf:
-            path, taxon = spec.rsplit(":", 1)
-            gaf_loads.append((path, int(taxon)))
-        terms, pairs, gmap = loaders.build_ontology(spark, args.obo, gaf_loads)
-        emit("on_terms", terms.df)
-        emit("on_pairs", pairs.df, sort_within_by=["parent", "child"])
-        emit("gene_ontology_map", gmap.df)
+    written = write_tables(FAMILIES[args.cmd](spark, [load]), args.database, mode)
     for name, n in written.items():
         print(f"{name}: {n} rows written ({mode})")
     return written

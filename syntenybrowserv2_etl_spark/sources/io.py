@@ -8,10 +8,12 @@ and transactional rollback on any IntegrityError (V2: a bad row aborts the
 whole file's load — src/import_genes_exons.py:120-126).
 
 Spark-side equivalents:
-  - overwrite/append → parquet write modes, partitioned by taxon and sorted
-    within files by (chr, start) so parquet min/max row-group stats stand in
-    for the reference's 15 secondary indexes (SURVEY §4).
-  - INSERT OR REPLACE → window dedup BEFORE the write (upsert_dedup).
+  - overwrite/append → parquet write modes (write_table), with the partition
+    and in-file sort columns that plans.pipeline.TABLES gives each table, so
+    parquet min/max row-group stats stand in for the reference's 15
+    secondary indexes (SURVEY §4).
+  - INSERT OR REPLACE → dedup BEFORE the write (upsert_dedup), for the
+    tables whose catalogue key policy says so.
   - transactionality → validate-then-write: the bad-row DataFrame is counted
     first; only an empty one lets the write proceed. Parquet directory
     commit via Spark's output committer is already atomic-enough for a
@@ -82,10 +84,8 @@ def write_table(
     mode: str = "overwrite",
     partition_by: list[str] | None = None,
     sort_within_by: list[str] | None = None,
-    fmt: str = "parquet",
 ) -> int:
-    """S9/S10 — write a table as parquet (default) or ORC with the
-    index-emulating layout.
+    """S9/S10 — write a table as parquet with the index-emulating layout.
 
     ``partition_by`` (typically ["*_taxonid"]) gives partition pruning for
     the per-species query workload; ``sort_within_by`` (typically chr, start)
@@ -93,21 +93,12 @@ def write_table(
     answer range predicates — the Spark analogue of the reference's
     (taxonid, chr, start) B-tree indexes (src/import_genes_exons.py:58-62).
 
-    ``fmt="orc"`` writes ORC instead — same layout semantics (ORC stripe
-    stats play the row-group-stats role, and ORC predicate pushdown is on
-    by default in Spark), for consumers pinned to the Hive/Trino ORC
-    ecosystem. Both formats go through the same Observation row counting
-    and sort/partition layout, so the choice is a storage-format flag,
-    not a different writer path.
-
     Returns the number of rows written, measured by an ``Observation``
     attached to the write job itself — NOT a second ``df.count()`` action,
     which would recompute the whole loader DAG (at 100 TB, doubling build
     cost). In append mode this is exactly the rows added by THIS call,
     which a read-back count could not distinguish.
     """
-    if fmt not in ("parquet", "orc"):
-        raise ValueError(f"unsupported table format {fmt!r} (parquet|orc)")
     obs = Observation()
     df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
     if sort_within_by:
@@ -115,7 +106,7 @@ def write_table(
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    writer.format(fmt).save(path)
+    writer.parquet(path)
     return int(obs.get["rows"])
 
 

@@ -58,74 +58,15 @@ def _list_files(spark: SparkSession, path: str) -> list[str]:
     return sorted(files)
 
 
-# Above this many files the header probe switches from per-file limit(1)
-# jobs to ONE distributed job over the path list (see _probe_batched).
-_BATCH_PROBE_THRESHOLD = 16
-
-
-def _head_line(raw, max_bytes: int = 1 << 20) -> str:
-    """First physical line from an open byte stream, reading only head
-    chunks (64 KiB at a time, 1 MiB cap — header lines are short; the cap
-    bounds the probe on a pathological no-newline file)."""
-    buf = b""
-    while b"\n" not in buf and len(buf) < max_bytes:
-        chunk = raw.read(64 * 1024)
-        if not chunk:
-            break
-        buf += chunk
-    return buf.split(b"\n", 1)[0].decode("utf-8", "replace").rstrip("\r")
-
-
-def _probe_one_file(uri: str) -> str:
-    """Executor-side head read via pyarrow.fs (local/S3/HDFS/GCS), with
-    compression auto-detected from the suffix (.gz heads decompress only
-    the bytes needed for the first line)."""
-    import pyarrow.fs as pafs
-
-    if uri.startswith("file:"):
-        p = uri[len("file:"):]
-        while p.startswith("//"):
-            p = p[1:]
-        fs: pafs.FileSystem = pafs.LocalFileSystem()
-    elif "://" in uri:
-        fs, p = pafs.FileSystem.from_uri(uri)
-    else:
-        fs, p = pafs.LocalFileSystem(), uri
-    with fs.open_input_stream(p, compression="detect") as raw:
-        return _head_line(raw)
-
-
-def _probe_batched(spark: SparkSession, files: list[str]) -> list[tuple[str, str]]:
-    """All heads in ONE Spark job: distribute the path list, open each file
-    on the executor with pyarrow.fs, read to the first newline. O(1) jobs
-    regardless of glob size — at a 100k-file lake the per-file-job probe
-    would pay 100k job-launch round trips; this pays one."""
-    paths = spark.createDataFrame([(f,) for f in files], "file string")
-    n_part = max(1, min(len(files) // 64 + 1, 256))
-
-    def probe(batches):
-        for pdf in batches:
-            yield pdf.assign(line=[_probe_one_file(f) for f in pdf["file"]])
-
-    rows = (
-        paths.repartition(n_part)
-        .mapInPandas(probe, "file string, line string")
-        .collect()
-    )
-    by_file = {r["file"]: r["line"] for r in rows}
-    return [(f, by_file[f]) for f in files]
-
-
 def first_lines(spark: SparkSession, path: str) -> list[tuple[str, str]]:
     """Each file's FIRST physical line.
 
-    Small globs (≤ ``_BATCH_PROBE_THRESHOLD`` files — the genomics-fixture
-    case) use one ``spark.read.text(file).limit(1)`` per file: the limit is
-    pushed into the scan so only the head is decompressed/read (codec-safe
-    for .gz), and "first" is first by construction. Larger globs switch to
-    ``_probe_batched`` — one distributed job over the whole path list —
-    because per-file jobs are O(n_files) scheduler round trips, which is
-    the wrong shape at a 100k-file data lake.
+    One ``spark.read.text(file).limit(1)`` per file, run from a small
+    thread pool: the limit is pushed into the scan so only the head is
+    decompressed/read (codec-safe for .gz), "first" is first by
+    construction, and the read goes through the same Hadoop filesystem
+    stack as the real load. This is one Spark job per file, sized for the
+    few-file globs a genomics load passes.
 
     Empty files yield ``""`` (they then fail the caller's header check,
     which is the right V1/V5 outcome).
@@ -135,27 +76,6 @@ def first_lines(spark: SparkSession, path: str) -> list[tuple[str, str]]:
     files = _list_files(spark, path)
     if not files:
         raise SourceFormatError(f"{path}: empty file")
-    if len(files) > _BATCH_PROBE_THRESHOLD:
-        try:
-            return _probe_batched(spark, files)
-        except Exception as e:
-            # pyarrow.fs covers fewer schemes than Hadoop FS (no
-            # abfss/wasbs; hdfs needs libhdfs) and cannot see
-            # Hadoop-conf-only credentials, so a deployment whose small
-            # globs probe fine must not start failing when a glob grows
-            # past the batch threshold — fall back to the per-file
-            # Hadoop-path probe below (slower, O(n_files) jobs, but it
-            # reads through the same stack as the real load). Warn
-            # loudly: at a 100k-file lake the fallback is a multi-hour
-            # degradation, and a genuine infra error must not hide in it.
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "batched header probe failed (%s: %s); falling back to "
-                "per-file probes over %d files — this is O(n_files) Spark "
-                "jobs and may be slow",
-                type(e).__name__, e, len(files),
-            )
 
     def head(f: str) -> tuple[str, str]:
         rows = spark.read.text(f).limit(1).collect()

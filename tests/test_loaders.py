@@ -65,13 +65,13 @@ def test_genes_exons_fk_joins(spark, fixtures_dir):
 def test_synteny_blocks(spark, fixtures_dir):
     res = loaders.load_synteny_blocks(spark, f"{fixtures_dir}/synteny.tsv")
     rows = res.df.collect()
-    # 4 input rows → ×2 symmetric (X3) = 8, minus last-write-wins dedup:
-    # rows 1 and 4 share (9606, 10090, chr1→1, 1000) forward PK and the
-    # reversed PK (10090, 9606, 3, 2000) → 2 dupes dropped = 6
-    assert len(rows) == 6
+    # 4 input rows → ×2 symmetric (X3) = 8. Rows 1 and 4 share a PK in
+    # both directions; the last-write-wins dedup that drops them to 6 is
+    # the table's key policy (test_build_database, test_cli_loader_roundtrip)
+    assert len(rows) == 8
     fwd = [r for r in rows if r["ref_taxonid"] == 9606]
     rev = [r for r in rows if r["ref_taxonid"] == 10090]
-    assert len(fwd) == 3 and len(rev) == 3  # symmetric
+    assert len(fwd) == 4 and len(rev) == 4  # symmetric
     b2 = next(r for r in fwd if r["symbol"] == "SynBlock002")
     assert b2["same_orientation"] is False  # P5 '-'
     # chr prefix NOT stripped in synteny blocks — parity with the reference,
@@ -135,8 +135,9 @@ def test_variants(spark, fixtures_dir):
 def test_homologs(spark, fixtures_dir):
     res = loaders.load_homologs(spark, f"{fixtures_dir}/homologs.tsv")
     rows = res.df.collect()
-    # 4 rows → ×2 = 8; H1/M1 duplicated (X5 keeps one per direction) → 6
-    assert len(rows) == 6
+    # 4 rows → ×2 = 8; the H1/M1 duplicate pair stays until the table's
+    # last-write-wins key policy (X5) drops it to 6 at write time
+    assert len(rows) == 8
     assert res.warnings["non_orthologue_type"].count() == 1  # V4 warn, row kept
     h1 = next(r for r in rows if r["ref_gene_id"] == "H1")
     assert h1["ref_seq_id"] == "17"  # chr strip
@@ -171,16 +172,15 @@ def test_headered_tsv_per_file_contract(spark, tmp_path):
         text_sources.read_headered_tsv(spark, str(d), ["a", "b"])
 
 
-def test_first_lines_batched_many_file_glob(spark, tmp_path):
-    """A glob wider than _BATCH_PROBE_THRESHOLD probes all heads in ONE
-    distributed job (O(1) jobs at a 100k-file lake, not O(files)); the
-    batched path must agree with per-file semantics: gzip heads, empty
-    files → \"\", CRLF stripped, no-trailing-newline single lines."""
+def test_first_lines_many_file_glob(spark, tmp_path):
+    """Every head of a 44-file directory is probed with per-file
+    semantics: gzip heads, empty files → \"\", CRLF stripped,
+    no-trailing-newline single lines."""
     import gzip
 
     d = tmp_path / "many"
     d.mkdir()
-    n = text_sources._BATCH_PROBE_THRESHOLD + 24
+    n = 40
     expect = {}
     for i in range(n):
         f = d / f"part_{i:03d}.tsv"
@@ -202,51 +202,6 @@ def test_first_lines_batched_many_file_glob(spark, tmp_path):
     for fname, line in got:
         key = fname[len("file:"):] if fname.startswith("file:") else fname
         assert expect[key] == line, fname
-
-
-def test_first_lines_dispatches_batched_above_threshold(spark, tmp_path, monkeypatch):
-    d = tmp_path / "disp"
-    d.mkdir()
-    for i in range(text_sources._BATCH_PROBE_THRESHOLD + 1):
-        (d / f"f{i}.tsv").write_text("##h\nv\n")
-    calls = {"batched": 0}
-    real = text_sources._probe_batched
-
-    def spy(spark_, files):
-        calls["batched"] += 1
-        return real(spark_, files)
-
-    monkeypatch.setattr(text_sources, "_probe_batched", spy)
-    text_sources.first_lines(spark, str(d))
-    assert calls["batched"] == 1
-
-    # small glob stays on the per-file pushdown path
-    small = tmp_path / "small"
-    small.mkdir()
-    (small / "one.tsv").write_text("##h\nv\n")
-    calls["batched"] = 0
-    text_sources.first_lines(spark, str(small))
-    assert calls["batched"] == 0
-
-
-def test_first_lines_falls_back_when_batched_probe_fails(spark, tmp_path, monkeypatch):
-    """pyarrow.fs supports fewer URI schemes than Hadoop FS (no abfss/wasbs,
-    Hadoop-conf-only credentials invisible); if the batched executor-side
-    probe fails, a wide glob must fall back to the per-file Hadoop path
-    instead of failing a load that worked below the threshold."""
-    d = tmp_path / "fb"
-    d.mkdir()
-    n = text_sources._BATCH_PROBE_THRESHOLD + 4
-    for i in range(n):
-        (d / f"f{i:02d}.tsv").write_text(f"##h{i}\nv\n")
-
-    def boom(spark_, files):
-        raise RuntimeError("scheme not supported by pyarrow.fs")
-
-    monkeypatch.setattr(text_sources, "_probe_batched", boom)
-    got = dict(text_sources.first_lines(spark, str(d)))
-    assert len(got) == n
-    assert set(got.values()) == {f"##h{i}" for i in range(n)}
 
 
 def test_headered_tsv_extras_warning_channel(spark, fixtures_dir):
@@ -320,37 +275,6 @@ def test_jsonl_source_routes_bad_records(spark, tmp_path):
     assert len(b) == 2
     assert b[0][0] == "malformed_json" and "not json" in b[0][1]
     assert b[1][0] == "missing_required:text" and '"doc_id":2' in b[1][1]
-
-
-def test_write_table_orc_roundtrip(spark, tmp_path):
-    """write_table(fmt='orc') must produce the same layout semantics as
-    the parquet path: partition directories, in-file sort, row count from
-    the write-attached Observation — and read back value-identical."""
-    from pyspark.sql import functions as F
-
-    from syntenybrowserv2_etl_spark.sources import io as sio
-
-    df = spark.range(100).select(
-        F.col("id"),
-        (F.col("id") % 4).alias("part"),
-        (F.col("id") * 3 % 17).alias("v"),
-    )
-    path = str(tmp_path / "orc_table")
-    n = sio.write_table(
-        df, path, partition_by=["part"], sort_within_by=["v"], fmt="orc"
-    )
-    assert n == 100
-    back = spark.read.orc(path)
-    assert back.count() == 100
-    assert {r["part"] for r in back.select("part").distinct().collect()} == {0, 1, 2, 3}
-    got = {(r["id"], r["v"]) for r in back.select("id", "v").collect()}
-    want = {(i, i * 3 % 17) for i in range(100)}
-    assert got == want
-    # unsupported formats fail loudly, not by writing something else
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        sio.write_table(df, path + "2", fmt="avro")
 
 
 # --- JSONL corpus source / sharded sink (sources/jsonl.py) -----------------

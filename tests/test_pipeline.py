@@ -38,6 +38,18 @@ def test_build_database(spark, fixtures_dir, tmp_path):
         "on_pairs": 6,
         "gene_ontology_map": 2,
     }
+    # every partitioned table is laid out in the catalogue's partition
+    # column, one <column>=<taxon> directory per taxon
+    import os
+
+    for name, plan in pipeline.TABLES.items():
+        if plan.partition_by is None:
+            continue
+        parts = [d for d in os.listdir(f"{out}/{name}") if not d.startswith(("_", "."))]
+        assert parts, name
+        for d in parts:
+            col, _, taxon = d.partition("=")
+            assert col == plan.partition_by and taxon.isdigit(), (name, d)
     # written layout is readable and partition-pruned by taxon
     gene = spark.read.parquet(f"{out}/gene")
     assert gene.filter("gene_taxonid = 10090").count() == 3
@@ -63,6 +75,9 @@ def test_cli_loader_roundtrip(spark, fixtures_dir, tmp_path):
     assert gene.filter("gene_taxonid = 10116").count() == 3
     w3 = pipeline.main(["homologs", out, f"{fixtures_dir}/homologs.tsv", "-c"])
     assert w3 == {"homolog": 6}
+    # table-level last-write-wins: 8 symmetric rows, 2 sharing a PK
+    w4 = pipeline.main(["synteny-blocks", out, f"{fixtures_dir}/synteny.tsv", "-c"])
+    assert w4 == {"syntenic_block": 6}
 
 
 def test_build_database_single_computation(spark, fixtures_dir, tmp_path, monkeypatch):

@@ -1,62 +1,43 @@
-"""A3/A4 — transitive closure of a DAG by iterative self-join (semi-naïve).
+"""A3/A4 — transitive closure of the is_a DAG, closed on the Spark driver.
 
-Reference: src/import_ontology.py:110-145 — a single-threaded worklist walk
-propagating descendant sets up the ontology `is_a` DAG, then emitting every
-(ancestor, descendant) pair and a per-ancestor descendant count.
+Reference: src/import_ontology.py:110-145 — one global is_a graph (Q9) held
+in a Python dict, walked to give every (ancestor, descendant) pair and a
+per-ancestor descendant count.
 
-Spark formulation (the one genuinely algorithmic operator in the reference):
-semi-naïve iteration — join only the *frontier* (pairs discovered last round)
-against the edge set, so round k does work proportional to the new pairs, not
-the whole closure:
+The graph is metadata-sized (GO + MP + DO: ~10^5 edges), so the closure
+follows the reference: the distinct edges are collected in one Spark job,
+closed with an iterative memoized depth-first walk, and the pairs come back
+through ``createDataFrame`` (Arrow). An iterative self-join would instead
+pay one or more Spark jobs per level of depth for the same answer.
 
-    closure₀ = frontier₀ = edges
-    frontierₖ = (frontierₖ₋₁ ⋈ edges) \\ closureₖ₋₁
-    closureₖ  = closureₖ₋₁ ∪ frontierₖ          (until frontier empty)
-
-Scale notes:
- - every round's results are ``localCheckpoint``-ed: the logical plan would
-   otherwise double per round and Catalyst analysis cost would dominate;
-   checkpointing also truncates lineage so a 20-deep ontology doesn't build
-   a 20-join megaplan.
- - edge set is broadcast when small (ontologies: ~50k edges ≪ the 64 MB
-   threshold) making every round shuffle-free; for a huge graph the join
-   degrades gracefully to shuffle hash/sort-merge on the join key.
- - iteration cap = closure depth, bounded at ``max_iterations`` to survive
-   accidentally cyclic input (OBO should be a DAG; don't hang on bad data).
+Two guards keep the driver honest:
+ - a graph with more than ``EDGE_CAP`` distinct edges fails before it is
+   pulled in (the collect reads at most ``EDGE_CAP + 1`` rows);
+ - a cycle raises ``ValueError`` naming a term on it (OBO is_a must be a
+   DAG; the reference assumes one, src/import_ontology.py:110-130).
 """
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Largest edge set closed on the driver. Real GO+MP+DO is ~10^5 edges.
+EDGE_CAP = 1_000_000
+
 
 def transitive_closure(
-    edges: DataFrame,
-    child_col: str = "child",
-    parent_col: str = "parent",
-    max_iterations: int = 64,
-    broadcast_edges: bool = True,
-    method: str = "doubling",
+    edges: DataFrame, child_col: str = "child", parent_col: str = "parent"
 ) -> DataFrame:
     """All (ancestor, descendant) pairs reachable via 1+ edges.
 
     ``edges`` rows read "child is_a parent". Output columns:
-    (ancestor, descendant) — matching the reference's on_pairs orientation
-    where `parent` is the ancestor and `child` the (transitive) descendant
-    (src/import_ontology.py:132-140).
-
-    ``method``:
-      - ``"doubling"`` (default): path doubling — round k holds all paths of
-        length ≤ 2^k, so convergence takes ⌈log₂ depth⌉ rounds. Best when
-        the closure itself is join-able (ontologies: ≤ a few M pairs);
-        per-round cost grows with the closure, but round count — the
-        dominant cost on iterative Spark jobs — collapses (depth-14 DAG:
-        4 rounds vs 14).
-      - ``"seminaive"``: frontier ⋈ edges per round — work proportional to
-        newly-discovered pairs, rounds equal to graph depth. The safe choice
-        for very deep or near-pathological graphs where squaring the closure
-        would blow up intermediates.
+    (ancestor, descendant) — the reference's on_pairs orientation, where
+    `parent` is the ancestor and `child` the (transitive) descendant
+    (src/import_ontology.py:132-140). Each output column keeps the type of
+    the input column it comes from; null ids and repeated edges are ignored.
     """
     base = (
         edges.select(
@@ -65,86 +46,56 @@ def transitive_closure(
         .filter(F.col("ancestor").isNotNull() & F.col("descendant").isNotNull())
         .distinct()
     )
-    if method == "doubling":
-        # Pairs carry a path length (__dist, any-witness min) so the loop can
-        # prove convergence WITHOUT the trailing no-op round the r1 version
-        # paid (one full join+anti just to observe "nothing new"). Soundness
-        # of the early exit: after round k every pair with shortest distance
-        # ≤ 2^k is known. If some pair were still missing, its shortest path
-        # has length > 2^k, and that path's length-2^k prefix is a pair whose
-        # shortest distance is exactly 2^k — first discovered THIS round, and
-        # any derivation this round sums two ≤2^(k-1) halves, so its recorded
-        # __dist is exactly 2^k. Contrapositive: max(__dist of new pairs)
-        # < 2^k ⇒ the closure is already complete — stop now, not next round.
-        closure = base.withColumn("__dist", F.lit(1).cast("long")).localCheckpoint(
-            eager=True
+    rows = base.limit(EDGE_CAP + 1).collect()
+    if len(rows) > EDGE_CAP:
+        raise ValueError(
+            f"transitive_closure: more than {EDGE_CAP} distinct edges; the "
+            "closure runs on the driver and is capped at that size"
         )
-        for k in range(1, max_iterations + 1):
-            hop = closure.select(
-                F.col("ancestor").alias("__mid"),
-                F.col("descendant").alias("__dst"),
-                F.col("__dist").alias("__hop_dist"),
-            )
-            grown = (
-                closure.join(hop, closure["descendant"] == hop["__mid"])
-                .select(
-                    "ancestor",
-                    F.col("__dst").alias("descendant"),
-                    (F.col("__dist") + F.col("__hop_dist")).alias("__dist"),
-                )
-                .groupBy("ancestor", "descendant")
-                .agg(F.min("__dist").alias("__dist"))
-            )
-            # (round 17: a lazy checkpoint folded into the convergence agg
-            # measured no faster than eager-then-probe — kept eager)
-            new_pairs = grown.join(
-                closure, ["ancestor", "descendant"], "left_anti"
-            ).localCheckpoint(eager=True)
-            max_new = new_pairs.agg(F.max("__dist")).first()[0]
-            if max_new is None:
-                return closure.drop("__dist")
-            # Union of checkpointed chunks, NOT re-checkpointed: each round
-            # only materializes the new pairs; re-materializing the whole
-            # closure would copy O(closure) per round. The plan stays
-            # shallow — a k-way union of checkpointed leaves.
-            closure = closure.unionByName(new_pairs)
-            if max_new < 2**k:
-                return closure.drop("__dist")
-        raise RuntimeError(
-            f"transitive_closure did not converge in {max_iterations} rounds — "
-            "cyclic input? (reference assumes a DAG: src/import_ontology.py:110-130)"
-        )
-    closure = base.localCheckpoint(eager=True)
+    children: dict = defaultdict(list)
+    for parent, child in rows:
+        children[parent].append(child)
+    pairs = [(a, d) for a, below in _descendants(children).items() for d in below]
+    import pandas as pd  # local: keep module import light
 
-    frontier = closure
-    # Disjoint column names on the hop side sidestep self-join attribute
-    # ambiguity across checkpoint boundaries (Catalyst resolves by name).
-    hop = base.select(
-        F.col("ancestor").alias("__mid"), F.col("descendant").alias("__dst")
-    ).localCheckpoint(eager=True)
-    if broadcast_edges:
-        hop = F.broadcast(hop)
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame(pairs, columns=["ancestor", "descendant"]), base.schema
+    )
 
-    for _ in range(max_iterations):
-        # grandchild: frontier(ancestor, mid) ⋈ hop(mid, dst)
-        grown = (
-            frontier.join(hop, frontier["descendant"] == hop["__mid"])
-            .select("ancestor", F.col("__dst").alias("descendant"))
-            .distinct()
-        )
-        new_frontier = grown.join(
-            closure, ["ancestor", "descendant"], "left_anti"
-        ).localCheckpoint(eager=True)
-        if new_frontier.isEmpty():
-            break
-        closure = closure.unionByName(new_frontier)  # chunks already checkpointed
-        frontier = new_frontier
-    else:
-        raise RuntimeError(
-            f"transitive_closure did not converge in {max_iterations} rounds — "
-            "cyclic input? (reference assumes a DAG: src/import_ontology.py:110-130)"
-        )
-    return closure
+
+def _descendants(children: dict) -> dict:
+    """node → set of nodes below it, for every node with a child.
+
+    Iterative post-order walk: a node's set is the union of its children
+    and their sets, computed once (memoized) after all of them. A child met
+    again while still on the walk's path closes a cycle.
+    """
+    below: dict = {}
+    on_path: set = set()
+    for root in children:
+        if root in below:
+            continue
+        stack = [(root, iter(children[root]))]
+        on_path.add(root)
+        while stack:
+            node, pending = stack[-1]
+            for child in pending:
+                if child in on_path:
+                    raise ValueError(
+                        f"transitive_closure: is_a cycle through term {child!r}"
+                    )
+                if child not in below and child in children:
+                    stack.append((child, iter(children[child])))
+                    on_path.add(child)
+                    break
+            else:
+                stack.pop()
+                on_path.discard(node)
+                acc = set(children[node])
+                for child in children[node]:
+                    acc.update(below.get(child, ()))
+                below[node] = acc
+    return below
 
 
 def descendant_counts(closure: DataFrame) -> DataFrame:

@@ -154,7 +154,7 @@ def load_synteny_blocks(spark: SparkSession, path: str) -> LoadResult:
     bad = raw.filter(
         F.col("block_id").isNull() | ~F.col("block_id").startswith("ID=SynBlock")
     )
-    if bad.limit(1).count() > 0:
+    if not bad.isEmpty():
         raise io.LoadAborted(
             "synteny block_id without 'ID=SynBlock' prefix (V2 abort, "
             "reference src/import_synteny_blocks.py:63-70)"

@@ -1,84 +1,71 @@
-"""S7 — OBO stanza source, Spark-native.
+"""S7 — OBO stanza source, Spark-native and shuffle-free.
 
 Reference: src/import_ontology.py:192-268 — a stateful line machine: `[Term]`
 starts a stanza, `key: value` lines accumulate, `is_a:` repeats, obsolete
 terms are discarded mid-stanza, and the final stanza is flushed at EOF.
 
-Order-dependent parsing is the one place Spark's unordered model needs care
-(SURVEY §7 hard-part 2): ``monotonically_increasing_id`` is only
-partition-monotonic, so instead each file is read WHOLE (``wholetext``) and
-line-numbered with ``posexplode`` — per-file line order is then exact by
-construction, regardless of partitioning. One file = one row = one task;
-ontology files are ≤ tens of MB (GO ~35 MB), far under the 2 GB string cap.
-At 100 TB-scale ingest the unit of parallelism is the *file*, which is how
-ontology releases ship; data-plane tables never flow through this path.
+Each file is read WHOLE (``wholetext``: one file = one row = one task) and
+split into one row per stanza at every newline that is followed by ``[`` —
+the same "a line starting with ``[`` opens a stanza" rule as the reference.
+Every key is then pulled out of its stanza's text with a multiline regex, so
+the plan is scan → generate → project → filter: no Window, no Aggregate and
+no Exchange. Ontology files are ≤ tens of MB (GO ~35 MB), far under the
+2 GB string cap, and ontology releases ship as files, so the file is the
+unit of parallelism.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+
+def _values(key: str):
+    """Every value of ``key: value`` lines in the stanza, in order. ``.``
+    stops at any line terminator, so a CRLF line's ``\\r`` stays out."""
+    return F.regexp_extract_all("text", F.lit(f"(?m)^{key}: (.*)$"), 1)
+
+
+def _value(key: str):
+    """The greatest value of a key (a repeated key keeps its max); null if
+    the stanza has none."""
+    return F.array_max(_values(key))
 
 
 def read_obo_terms(spark: SparkSession, path: str) -> DataFrame:
     """Parse OBO → one row per non-obsolete [Term] stanza.
 
     Output: (file, stanza, id, name, namespace, def, is_a ARRAY<STRING>)
-    where is_a holds bare parent ids (`` ! comment`` suffix stripped —
-    reference src/import_ontology.py:246-251).
+    where ``stanza`` numbers the file's stanzas from 1 (the preamble is 0),
+    a repeated key keeps its greatest value, and is_a holds the sorted bare
+    parent ids (`` ! comment`` suffix stripped — reference
+    src/import_ontology.py:246-251).
     """
     # NOTE: must be the ``wholetext=True`` kwarg — in PySpark 4.1 the
     # ``.option("wholetext", "true")`` spelling is silently ignored for the
-    # text source and the file comes back line-split, collapsing every pos
-    # to 0 and breaking stanza assignment.
-    lines = (
-        spark.read.text(path, wholetext=True)
-        .withColumn("file", F.input_file_name())
-        .select("file", F.posexplode(F.split("value", r"\r?\n")).alias("pos", "line"))
-    )
-    w = Window.partitionBy("file").orderBy("pos")
-    # Running count of stanza-header lines = stanza id; the header's own text
-    # identifies stanza kind ([Term] vs [Typedef] — the latter ignored,
-    # reference src/import_ontology.py:204-205).
-    lines = lines.withColumn(
-        "stanza", F.sum(F.when(F.col("line").startswith("["), 1).otherwise(0)).over(w)
-    )
-    kv = lines.select(
-        "file",
-        "stanza",
-        F.col("line").startswith("[").alias("is_header"),
-        F.col("line").alias("line"),
-        F.regexp_extract("line", r"^([A-Za-z_]+): (.*)$", 1).alias("key"),
-        F.regexp_extract("line", r"^([A-Za-z_]+): (.*)$", 2).alias("value"),
-    )
-
-    def first_of(key: str):
-        return F.max(F.when(F.col("key") == key, F.col("value"))).alias(key)
-
-    stanzas = (
-        kv.groupBy("file", "stanza")
-        .agg(
-            F.max(F.when(F.col("is_header"), F.col("line"))).alias("header"),
-            first_of("id"),
-            first_of("name"),
-            first_of("namespace"),
-            F.max(F.when(F.col("key") == "def", F.col("value"))).alias("def"),
-            first_of("is_obsolete"),
-            F.sort_array(
-                F.collect_list(
-                    F.when(
-                        F.col("key") == "is_a",
-                        F.trim(F.split(F.col("value"), "!").getItem(0)),
-                    )
-                )
-            ).alias("is_a"),
-        )
+    # text source and the file comes back line-split.
+    # The leading newline makes chunk 0 the preamble (empty when the file
+    # opens with a stanza), so the chunk position is the stanza number.
+    stanzas = spark.read.text(path, wholetext=True).select(
+        F.input_file_name().alias("file"),
+        F.posexplode(
+            F.split(F.concat(F.lit("\n"), "value"), r"\n(?=\[)")
+        ).alias("stanza", "text"),
     )
     return (
-        stanzas.filter(F.col("header") == "[Term]")
-        .filter(~F.coalesce(F.col("is_obsolete") == "true", F.lit(False)))  # F4
+        stanzas.filter(
+            F.col("text").rlike(r"^\[Term\]\r?(\n|$)")
+            & ~_value("is_obsolete").eqNullSafe("true")  # F4
+        )
+        .select(
+            "file",
+            F.col("stanza").cast("long").alias("stanza"),
+            *(_value(k).alias(k) for k in ("id", "name", "namespace", "def")),
+            F.sort_array(
+                F.transform(_values("is_a"), lambda v: F.trim(F.split(v, "!")[0]))
+            ).alias("is_a"),
+        )
         .filter(F.col("id").isNotNull())
-        .select("file", "stanza", "id", "name", "namespace", "def", "is_a")
     )
 
 

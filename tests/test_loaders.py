@@ -247,6 +247,17 @@ def test_ontology(spark, fixtures_dir):
     assert set(gmap_rows) == {("G1", "c"), ("G2", "b")}
 
 
+def test_ontology_duplicate_term_across_files_aborts(spark, fixtures_dir, tmp_path):
+    """X6 (reference src/import_ontology.py:212-224): a term id defined in
+    two OBO files aborts the build, naming the id."""
+    other = tmp_path / "other.obo"
+    other.write_text("[Term]\nid: zz\nname: fresh\n\n[Term]\nid: b\nname: again\n")
+    with pytest.raises(io.LoadAborted, match="'b'"):
+        loaders.build_ontology(
+            spark, [f"{fixtures_dir}/onto.obo", str(other)], []
+        )
+
+
 def test_jsonl_source_routes_bad_records(spark, tmp_path):
     """read_jsonl: malformed lines and rows missing required fields land
     in the bad channel with a reason; good rows carry the declared schema

@@ -54,13 +54,60 @@ def test_closure_chain_depth(spark):
 
 
 def test_closure_cycle_guard(spark):
+    # is_a must be a DAG: a cycle raises, naming a term on it, instead of
+    # converging to the cycle's cross pairs
     edges = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("c", "a")], ["child", "parent"]
     )
-    # a cycle converges (closure of a cycle is the full cross-pairs set) —
-    # must terminate, not hang
-    cl = closure_ops.transitive_closure(edges, max_iterations=10)
-    assert cl.count() == 9
+    with pytest.raises(ValueError, match=r"cycle through term '[abc]'"):
+        closure_ops.transitive_closure(edges)
+
+
+def test_closure_self_loop(spark):
+    edges = spark.createDataFrame([("x", "y"), ("a", "a")], ["child", "parent"])
+    with pytest.raises(ValueError, match="cycle through term 'a'"):
+        closure_ops.transitive_closure(edges)
+
+
+def test_closure_keeps_long_ids(spark):
+    edges = spark.range(1, 8).select(
+        F.col("id").alias("child"), (F.col("id") - 1).alias("parent")
+    )
+    cl = closure_ops.transitive_closure(edges)
+    assert [f.dataType.simpleString() for f in cl.schema] == ["bigint", "bigint"]
+    assert cl.count() == 7 * 8 // 2
+    assert all(isinstance(v, int) for r in cl.collect() for v in r)
+
+
+def test_closure_no_edges(spark):
+    edges = spark.createDataFrame(
+        [(None, "a"), ("b", None)], "child string, parent string"
+    )
+    cl = closure_ops.transitive_closure(edges)
+    assert cl.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in cl.schema] == [
+        ("ancestor", "string"),
+        ("descendant", "string"),
+    ]
+
+
+def test_closure_job_count(spark):
+    """The closure is one collect of the distinct edges, not a loop of
+    Spark rounds: the 20-deep chain closes in at most 2 jobs (the distinct's
+    shuffle stage and the collect)."""
+    n = 20
+    edges = spark.createDataFrame(
+        [(f"n{i}", f"n{i+1}") for i in range(n)], ["child", "parent"]
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("closure-job-count", "closure job-count pin")
+    try:
+        cl = closure_ops.transitive_closure(edges)
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = sc.statusTracker().getJobIdsForGroup("closure-job-count")
+    assert 1 <= len(jobs) <= 2, jobs
+    assert cl.count() == n * (n + 1) // 2
 
 
 # --- range joins -----------------------------------------------------------

@@ -86,13 +86,15 @@ def test_build_database_single_computation(spark, fixtures_dir, tmp_path, monkey
     second time (a 2x build cost at 100 TB). Row counts now come from an
     ``Observation`` inside the write job itself. Pin it: forbid ``count()``
     entirely during the build and check the reported numbers still match.
+    The patch goes on the class the session really returns: PySpark's
+    classic DataFrame overrides ``count``, so patching the base class would
+    never fire. The ontology input covers the closure's collect path too.
     """
-    from pyspark.sql import DataFrame
 
     def _no_count(self):
         raise AssertionError("df.count() called during build — plan recomputed")
 
-    monkeypatch.setattr(DataFrame, "count", _no_count)
+    monkeypatch.setattr(type(spark.range(1)), "count", _no_count)
     inputs = pipeline.PipelineInputs(
         species=[
             pipeline.SpeciesInputs(
@@ -104,7 +106,7 @@ def test_build_database_single_computation(spark, fixtures_dir, tmp_path, monkey
         synteny_tsvs=[f"{fixtures_dir}/synteny.tsv"],
         homolog_tsvs=[],
         vcf_paths=[],
-        obo_paths=[],
+        obo_paths=[f"{fixtures_dir}/onto.obo"],
         gaf_loads=[],
     )
     counts = pipeline.build_database(spark, inputs, str(tmp_path / "db"))
@@ -113,6 +115,9 @@ def test_build_database_single_computation(spark, fixtures_dir, tmp_path, monkey
         "exon": 4,
         "syntenic_block": 6,
         "cytogenetic_band": 3,
+        "on_terms": 6,
+        "on_pairs": 6,
+        "gene_ontology_map": 0,
     }
 
 

@@ -327,6 +327,21 @@ def test_shuffle_shards_single_exchange(spark):
     assert "CartesianProduct" not in p
 
 
+def test_obo_parse_is_shuffle_free(spark):
+    """read_obo_terms splits each whole file into stanzas and reads keys by
+    regex: the executed plan has no Exchange and no Window."""
+    import os
+
+    from syntenybrowserv2_etl_spark.sources import obo
+
+    path = os.path.join(os.path.dirname(__file__), "fixtures", "onto.obo")
+    df = obo.read_obo_terms(spark, path)
+    assert len(df.collect()) == 6
+    p = df._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in p
+    assert "Window" not in p
+
+
 def test_span_dedup_winner_uses_window_group_limit(spark):
     """q70: winner election must plan as WindowGroupLimit (rank-1 pushdown
     with a partial stage before the shuffle), shuffling only (hash, len)

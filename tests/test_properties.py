@@ -9,11 +9,16 @@ single-node graphs, zero-width intervals).
 
 from __future__ import annotations
 
+import os
+import re
+import tempfile
+
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from syntenybrowserv2_etl_spark.operators import asof, closure, range_join as rj
+from syntenybrowserv2_etl_spark.sources import obo
 
 SETTINGS = dict(
     max_examples=12,
@@ -51,15 +56,93 @@ dag_edges = st.sets(
 )
 
 
-@given(edges=dag_edges, method=st.sampled_from(["doubling", "seminaive"]))
+@given(edges=dag_edges)
 @settings(**SETTINGS)
-def test_closure_matches_bruteforce(spark, edges, method):
+def test_closure_matches_bruteforce(spark, edges):
     df = spark.createDataFrame(list(edges), ["child", "parent"])
     got = {
         (r["ancestor"], r["descendant"])
-        for r in closure.transitive_closure(df, method=method).collect()
+        for r in closure.transitive_closure(df).collect()
     }
     assert got == py_closure(edges)
+
+
+def py_obo(text: str) -> list[tuple]:
+    """The reference's OBO line machine (src/import_ontology.py:192-268):
+    a line starting with ``[`` opens stanza n+1 (the preamble is stanza 0);
+    ``key: value`` lines accumulate; a repeated key keeps its greatest
+    value; only non-obsolete [Term] stanzas with an id survive."""
+    stanzas, n = [], 0
+    for line in re.split(r"\r?\n", text):
+        if line.startswith("["):
+            n += 1
+            stanzas.append((n, line, {}))
+        elif stanzas:
+            key, sep, value = line.partition(": ")
+            if sep and re.fullmatch(r"[A-Za-z_]+", key):
+                stanzas[-1][2].setdefault(key, []).append(value)
+    out = []
+    for n, header, kv in stanzas:
+        one = {
+            k: max(kv[k]) if k in kv else None
+            for k in ("id", "name", "namespace", "def", "is_obsolete")
+        }
+        if header != "[Term]" or one["is_obsolete"] == "true" or one["id"] is None:
+            continue
+        is_a = sorted(v.split("!")[0].strip(" ") for v in kv.get("is_a", []))
+        out.append((n, one["id"], one["name"], one["namespace"], one["def"], is_a))
+    return sorted(out)
+
+
+# Values avoid line terminators other than the \n / \r\n line endings.
+obo_value = st.text(alphabet="abXY09 _:.-!", max_size=6)
+obo_line = st.one_of(
+    st.tuples(
+        st.sampled_from(["id", "name", "namespace", "def", "is_a", "synonym"]), obo_value
+    ).map(lambda kv: f"{kv[0]}: {kv[1]}"),
+    st.sampled_from(
+        [
+            "is_obsolete: true",
+            "is_obsolete: false",
+            "is_a: T:1 ! parent one",
+            "is_a: T:2",
+            "id:nospace",
+            "! comment line",
+            "",
+        ]
+    ),
+)
+obo_stanza = st.tuples(
+    st.sampled_from(["[Term]", "[Term]", "[Typedef]"]),
+    st.lists(obo_line, max_size=6),
+    st.booleans(),  # blank line after the stanza
+)
+
+
+@given(
+    preamble=st.lists(
+        st.sampled_from(["format-version: 1.2", "id: preamble_id", "ontology: t", ""]),
+        max_size=3,
+    ),
+    stanzas=st.lists(obo_stanza, max_size=5),
+    eol=st.sampled_from(["\n", "\r\n"]),
+    final_eol=st.booleans(),
+)
+@settings(**{**SETTINGS, "max_examples": 40})
+def test_obo_parse_matches_line_machine(spark, preamble, stanzas, eol, final_eol):
+    lines = list(preamble)
+    for header, body, blank in stanzas:
+        lines += [header, *body] + ([""] if blank else [])
+    text = eol.join(lines) + (eol if final_eol else "")
+    with tempfile.TemporaryDirectory() as d:
+        path = os.path.join(d, "t.obo")
+        with open(path, "w", newline="") as f:
+            f.write(text)
+        got = sorted(
+            (r["stanza"], r["id"], r["name"], r["namespace"], r["def"], list(r["is_a"]))
+            for r in obo.read_obo_terms(spark, path).collect()
+        )
+    assert got == py_obo(text)
 
 
 @given(

@@ -91,7 +91,7 @@ def noop(df):
 # nothing for the intended operator.
 KNOWN_OPS = frozenset({
     "exact_dedup", "minhash_lsh", "ngram_jaccard", "simhash",
-    "emb_neardup_lsh_star", "knn_bruteforce", "closure_doubling",
+    "emb_neardup_lsh_star", "knn_bruteforce", "closure",
     "binned_point_join", "contamination", "boilerplate", "upsample_mix",
     "pack_sequences", "unigram_logprob", "chunk_documents",
     "repetition_profile", "gopher_quality", "dedup_corpus_e2e",
@@ -222,14 +222,15 @@ def main():
             )
         )
 
-        # closure on a 16-ary forest over n_docs*f nodes: depth ~log16(n)
+        # closure on a 16-ary forest over n_docs*f nodes: depth ~log16(n),
+        # held under the driver-side closure's edge cap
         edges = (
-            spark.range(1, n_docs)
+            spark.range(1, min(n_docs, cl.EDGE_CAP))
             .select(
                 F.floor(F.col("id") / 16).alias("parent"), F.col("id").alias("child")
             )
         )
-        measure("closure_doubling", lambda: noop(cl.transitive_closure(edges)))
+        measure("closure", lambda: noop(cl.transitive_closure(edges)))
 
         # binned interval join: events-in-bands at growing point counts
         from syntenybrowserv2_etl_spark import queries as q

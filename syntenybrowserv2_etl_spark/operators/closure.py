@@ -5,14 +5,17 @@ in a Python dict, walked to give every (ancestor, descendant) pair and a
 per-ancestor descendant count.
 
 The graph is metadata-sized (GO + MP + DO: ~10^5 edges), so the closure
-follows the reference: the distinct edges are collected in one Spark job,
-closed with an iterative memoized depth-first walk, and the pairs come back
-through ``createDataFrame`` (Arrow). An iterative self-join would instead
-pay one or more Spark jobs per level of depth for the same answer.
+follows the reference: the edges are closed on the driver by one iterative
+memoized depth-first walk, ``descendants``. The ontology build
+(plans.loaders.build_ontology) feeds it the is_a lists of the terms it has
+already collected; ``transitive_closure`` serves an edge DataFrame (q14-q16)
+by collecting its distinct edges in one Spark job and handing the pairs
+back through ``createDataFrame`` (Arrow). An iterative self-join would
+instead pay one or more Spark jobs per level of depth for the same answer.
 
 Two guards keep the driver honest:
- - a graph with more than ``EDGE_CAP`` distinct edges fails before it is
-   pulled in (the collect reads at most ``EDGE_CAP + 1`` rows);
+ - a graph with more than ``EDGE_CAP`` distinct edges fails (a collect
+   reads at most ``EDGE_CAP + 1`` rows);
  - a cycle raises ``ValueError`` naming a term on it (OBO is_a must be a
    DAG; the reference assumes one, src/import_ontology.py:110-130).
 """
@@ -46,16 +49,8 @@ def transitive_closure(
         .filter(F.col("ancestor").isNotNull() & F.col("descendant").isNotNull())
         .distinct()
     )
-    rows = base.limit(EDGE_CAP + 1).collect()
-    if len(rows) > EDGE_CAP:
-        raise ValueError(
-            f"transitive_closure: more than {EDGE_CAP} distinct edges; the "
-            "closure runs on the driver and is capped at that size"
-        )
-    children: dict = defaultdict(list)
-    for parent, child in rows:
-        children[parent].append(child)
-    pairs = [(a, d) for a, below in _descendants(children).items() for d in below]
+    below = descendants(base.limit(EDGE_CAP + 1).collect())
+    pairs = [(a, d) for a, ds in below.items() for d in ds]
     import pandas as pd  # local: keep module import light
 
     return edges.sparkSession.createDataFrame(
@@ -63,13 +58,28 @@ def transitive_closure(
     )
 
 
-def _descendants(children: dict) -> dict:
-    """node → set of nodes below it, for every node with a child.
+def descendants(edges) -> dict:
+    """node → the nodes below it, for every node with a child.
 
+    ``edges`` is an iterable of (parent, child) pairs; repeats count once.
     Iterative post-order walk: a node's set is the union of its children
     and their sets, computed once (memoized) after all of them. A child met
     again while still on the walk's path closes a cycle.
+
+    Sets are dicts (insertion-ordered), so the nodes and each node's
+    descendants come out in an order fixed by ``edges`` alone: Python's
+    ``set`` iterates strings in an order that changes with the process's
+    hash seed, which would lay out every build's on_pairs files differently.
     """
+    distinct = dict.fromkeys(map(tuple, edges))
+    if len(distinct) > EDGE_CAP:
+        raise ValueError(
+            f"transitive_closure: more than {EDGE_CAP} distinct edges; the "
+            "closure runs on the driver and is capped at that size"
+        )
+    children: dict = defaultdict(list)
+    for parent, child in distinct:
+        children[parent].append(child)
     below: dict = {}
     on_path: set = set()
     for root in children:
@@ -91,9 +101,9 @@ def _descendants(children: dict) -> dict:
             else:
                 stack.pop()
                 on_path.discard(node)
-                acc = set(children[node])
+                acc = dict.fromkeys(children[node])
                 for child in children[node]:
-                    acc.update(below.get(child, ()))
+                    acc.update(below.get(child, {}))
                 below[node] = acc
     return below
 

@@ -1,4 +1,5 @@
-"""Shape-changing operators: SURVEY §2.4 X1-X4 (X5-X7 live in sources/io.py).
+"""Shape-changing operators: SURVEY §2.4 X1-X3 (X5-X7 live in sources/io.py;
+X4, multi-file accumulation, is one multi-path scan in sources/text_sources.py).
 
 All are pure DataFrame compositions — union/explode/select — that Catalyst
 plans without any shuffle except where semantically required (none of these
@@ -52,16 +53,3 @@ def symmetric_union(df: DataFrame, swap: dict[str, str]) -> DataFrame:
         *[F.col(full_swap.get(c, c)).alias(c) for c in df.columns]
     )
     return df.unionByName(swapped)
-
-
-def accumulate(dfs: list[DataFrame]) -> DataFrame:
-    """X4 — multi-file / multi-species accumulation into one table.
-
-    Reference: sequential appends into one SQLite table
-    (create_database.sh:16-18). unionByName keeps per-source lineage
-    parallel — each input stays its own set of scan tasks.
-    """
-    out = dfs[0]
-    for d in dfs[1:]:
-        out = out.unionByName(d)
-    return out

@@ -5,7 +5,15 @@ logical-plan construction; the caller decides write mode (overwrite/append,
 SURVEY S9/S10), and plans.pipeline.TABLES gives each table's write layout
 and primary-key policy. Error channels follow SURVEY §2.6:
 hard aborts raise before any write (V1/V2), skip/warn channels return
-counted side-DataFrames (V3/V4).
+counted side-DataFrames (V3/V4). The X6 duplicate-key aborts of gene and
+exon run on the staged output (plans.pipeline.write_tables); on_terms'
+runs here, on the terms the ontology build has already collected.
+
+A loader takes its table family's whole list of loads — one tuple per
+source file, ``(path, taxon)`` or ``(path,)`` — and reads them all in ONE
+scan; a per-file taxon is read off each row's source file
+(text_sources.file_param). So a family plans, optimizes and compiles its
+code once, however many species it loads.
 
 Reference programs (all under /root/reference/src/):
   import_genes_exons.py       → load_genes_exons
@@ -37,15 +45,23 @@ class LoadResult:
     warnings: dict[str, DataFrame] = field(default_factory=dict)
 
 
+def _collect(limited: DataFrame) -> list[dict]:
+    """Rows of a ``limit``-ed DataFrame as dicts, in ONE Spark job: through
+    Arrow the limit runs over all partitions at once, where ``collect()``
+    scans them in growing rounds, one job per round."""
+    return limited.toArrow().to_pylist()
+
+
 # ---------------------------------------------------------------------------
 # genes + exons (src/import_genes_exons.py)
 # ---------------------------------------------------------------------------
 
 
-def genes_exons_from_gff3(
-    raw: DataFrame, taxon_id: int
-) -> tuple[LoadResult, LoadResult]:
-    """9-column GFF3 rows → (gene, exon) DataFrames.
+def genes_exons_from_gff3(raw: DataFrame) -> tuple[LoadResult, LoadResult]:
+    """GFF3 rows → (gene, exon) DataFrames.
+
+    ``raw`` holds the 9 GFF3 columns plus ``file`` (the row's source file)
+    and ``taxon`` (the taxon that file was loaded for).
 
     Reference-faithful (src/import_genes_exons.py:100-136):
       - gene rows: EVERY top-level feature — BCBio's ``rec.features``, i.e.
@@ -63,9 +79,10 @@ def genes_exons_from_gff3(
         under an mRNA is NOT emitted, and a non-exon direct child IS), with
         ``parent_gene`` = the parent gene's **Dbxref id** (:128) — not the
         raw GFF ``Parent`` string — so ``exon.parent_gene = gene.gene_id``
-        is the working FK (§2.7 J1).
-      - duplicate PK aborts the load (X6 :120-126) — checked by the caller
-        via io.assert_no_duplicates before write.
+        is the working FK (§2.7 J1). A GFF ``ID`` is only unique within its
+        file, so the child → parent join keys on (file, ID).
+      - duplicate PK aborts the load (X6 :120-126) — checked on the staged
+        output by plans.pipeline.write_tables, before anything is published.
     """
     # A real GFF3 arrives as ONE (often gzipped, unsplittable) file — a
     # 1-task scan that would serialize the per-row attribute parse below
@@ -80,9 +97,10 @@ def genes_exons_from_gff3(
     genes_ok = top.filter(dbxref.isNotNull() & (F.length(dbxref) > 0))
     genes_skipped = top.filter(dbxref.isNull() | (F.length(dbxref) == 0))
     gene_keyed = genes_ok.select(
+        F.col("file").alias("__gff_file"),
         F.col("m").getItem("ID").alias("__gff_id"),
         dbxref.alias("gene_id"),
-        F.lit(taxon_id).cast("long").alias("gene_taxonid"),
+        F.col("taxon").cast("long").alias("gene_taxonid"),
         transforms.first_element(
             F.split(F.col("m").getItem("Symbol"), ",")
         ).alias("gene_symbol"),
@@ -102,24 +120,27 @@ def genes_exons_from_gff3(
     # genome's gene table is MBs while exons are the bulk — so broadcast
     # keeps the exon scan shuffle-free at any corpus size.
     children = subs.select(
+        "file",
         F.col("m").getItem("ID").alias("exon_id"),
         F.explode(F.split(F.col("m").getItem("Parent"), ",")).alias("__parent"),
         F.col("start").cast("long").alias("__start"),
         F.col("end").cast("long").alias("__end"),
     )
     exon = children.join(
-        F.broadcast(gene_keyed.select("__gff_id", "gene_id", "gene_chr")),
-        children["__parent"] == F.col("__gff_id"),
+        F.broadcast(
+            gene_keyed.select("__gff_file", "__gff_id", "gene_id", "gene_taxonid", "gene_chr")
+        ),
+        (children["file"] == F.col("__gff_file")) & (children["__parent"] == F.col("__gff_id")),
     ).select(
         "exon_id",
         F.col("gene_id").alias("parent_gene"),
-        F.lit(taxon_id).cast("long").alias("taxonid"),
+        F.col("gene_taxonid").alias("taxonid"),
         # reference uses the record (chromosome) id for the exon row (:128)
         F.col("gene_chr").alias("exon_chr"),
         (F.col("__start") - 1).alias("exon_start_pos"),
         F.col("__end").alias("exon_end_pos"),
     )
-    gene = gene_keyed.drop("__gff_id")
+    gene = gene_keyed.drop("__gff_file", "__gff_id")
     return (
         LoadResult(gene, {"missing_dbxref": genes_skipped}),
         LoadResult(exon),
@@ -127,11 +148,15 @@ def genes_exons_from_gff3(
 
 
 def load_genes_exons(
-    spark: SparkSession, path: str, taxon_id: int
+    spark: SparkSession, loads: list[tuple[str, int]]
 ) -> tuple[LoadResult, LoadResult]:
-    """GFF3 file → (gene, exon); see genes_exons_from_gff3 for semantics."""
-    raw = text_sources.read_gff3(spark, path)
-    return genes_exons_from_gff3(raw, taxon_id)
+    """(GFF3 path, taxon) loads → (gene, exon); see genes_exons_from_gff3."""
+    raw = text_sources.read_gff3(spark, [path for path, _ in loads]).select(
+        "*",
+        F.input_file_name().alias("file"),
+        text_sources.file_param(spark, loads).alias("taxon"),
+    )
+    return genes_exons_from_gff3(raw)
 
 
 # ---------------------------------------------------------------------------
@@ -139,8 +164,9 @@ def load_genes_exons(
 # ---------------------------------------------------------------------------
 
 
-def load_synteny_blocks(spark: SparkSession, path: str) -> LoadResult:
-    """Headerless 10-col TSV → symmetric syntenic_block rows.
+def load_synteny_blocks(spark: SparkSession, loads: list[tuple[str]]) -> LoadResult:
+    """Headerless 10-col TSVs, one ``(path,)`` load each → symmetric
+    syntenic_block rows.
 
     src/import_synteny_blocks.py:63-120: validate block_id prefix
     'ID=SynBlock' (V2 abort :70), strand → boolean (P5 :95), symbol =
@@ -150,14 +176,17 @@ def load_synteny_blocks(spark: SparkSession, path: str) -> LoadResult:
     last-write-wins (X5 :83-88) is the syntenic_block key policy in
     plans.pipeline.TABLES, applied once to the union of all files.
     """
-    raw = text_sources.read_headerless_tsv(spark, path, schemas.SYNTENY_TSV_RAW)
+    raw = text_sources.read_headerless_tsv(
+        spark, [path for path, in loads], schemas.SYNTENY_TSV_RAW
+    )
     bad = raw.filter(
         F.col("block_id").isNull() | ~F.col("block_id").startswith("ID=SynBlock")
-    )
-    if not bad.isEmpty():
+    ).select(F.input_file_name().alias("file"), "block_id")
+    for row in _collect(bad.limit(1)):
         raise io.LoadAborted(
-            "synteny block_id without 'ID=SynBlock' prefix (V2 abort, "
-            "reference src/import_synteny_blocks.py:63-70)"
+            f"{row['file']}: synteny block_id {row['block_id']!r} without "
+            "'ID=SynBlock' prefix (V2 abort, reference "
+            "src/import_synteny_blocks.py:63-70)"
         )
     fwd = raw.select(
         F.col("ref_taxonid").cast("long"),
@@ -188,13 +217,14 @@ def load_synteny_blocks(spark: SparkSession, path: str) -> LoadResult:
 # ---------------------------------------------------------------------------
 
 
-def load_cytobands(spark: SparkSession, path: str, taxon_id: int) -> LoadResult:
-    """GFF3 → cytogenetic_band; start gets the +1 shift (P9/Q6 :82)."""
-    raw = text_sources.read_gff3(spark, path)
+def load_cytobands(spark: SparkSession, loads: list[tuple[str, int]]) -> LoadResult:
+    """(GFF3 path, taxon) loads → cytogenetic_band; start gets the +1 shift
+    (P9/Q6 :82)."""
+    raw = text_sources.read_gff3(spark, [path for path, _ in loads])
     m = transforms.attributes_to_map("attributes")
     df = raw.select(
         m.getItem("ID").alias("id"),
-        F.lit(taxon_id).cast("long").alias("taxon_id"),
+        text_sources.file_param(spark, loads).cast("long").alias("taxon_id"),
         transforms.strip_chr_prefix("seq_id").alias("chr"),
         F.col("source"),
         F.col("type"),
@@ -213,21 +243,25 @@ def load_cytobands(spark: SparkSession, path: str, taxon_id: int) -> LoadResult:
 # ---------------------------------------------------------------------------
 
 
-def load_features(spark: SparkSession, path: str, taxon_id: int) -> LoadResult:
-    """GFF3 → feature; blacklist filter, '.'→NULL, keep-first dedup.
+def load_features(spark: SparkSession, loads: list[tuple[str, int]]) -> LoadResult:
+    """(GFF3 path, taxon) loads → feature; blacklist filter, '.'→NULL,
+    keep-first dedup.
 
-    src/import_features.py: version header check (V1 :72-76), type
+    src/import_features.py: per-file version header check (V1 :72-76), type
     blacklist (F2 :107-162), attribute whitelist via map access (P6
     :93-99,175-185; Alias collected-but-dropped — Q1 parity), '.'→NULL
-    (P8 :187-191), duplicate-PK-skip keeping first (X7 :203-210).
+    (P8 :187-191), duplicate-PK-skip keeping first (X7 :203-210; the key
+    holds the taxon, so it never spans two species' files).
     """
-    raw = text_sources.read_gff3(spark, path, require_version_header=True)
+    raw = text_sources.read_gff3(
+        spark, [path for path, _ in loads], require_version_header=True
+    )
     kept = transforms.filter_type_blacklist(
         raw, "type", transforms.FEATURE_TYPE_BLACKLIST
     )
     m = transforms.attributes_to_map("attributes")
     df = kept.select(
-        F.lit(taxon_id).cast("long").alias("taxon_id"),
+        text_sources.file_param(spark, loads).cast("long").alias("taxon_id"),
         transforms.strip_chr_prefix("seq_id").alias("seq_id"),
         transforms.dot_to_null("source").alias("source"),
         F.col("type"),
@@ -255,10 +289,12 @@ def load_features(spark: SparkSession, path: str, taxon_id: int) -> LoadResult:
 # ---------------------------------------------------------------------------
 
 
-def load_variants(spark: SparkSession, path: str, taxon_id: int = 9606) -> LoadResult:
-    """VCF → snp_variant; one row per gene in INFO['CG'] (X2 :80-82),
-    ALT joined '/' (P10 :86-90), AF/LT first element (P11 :93)."""
-    vcf = text_sources.read_vcf(spark, path)
+def load_variants(spark: SparkSession, loads: list[tuple[str, int]]) -> LoadResult:
+    """(VCF path, taxon) loads → snp_variant; one row per gene in INFO['CG']
+    (X2 :80-82), ALT joined '/' (P10 :86-90), AF/LT first element (P11 :93)."""
+    vcf = text_sources.read_vcf(spark, [path for path, _ in loads]).withColumn(
+        "taxon", text_sources.file_param(spark, loads)
+    )
     info = F.col("info")
     exploded = vcf.withColumn(
         "gene",
@@ -277,7 +313,7 @@ def load_variants(spark: SparkSession, path: str, taxon_id: int = 9606) -> LoadR
         .alias("frequency"),
         F.col("gene"),
         transforms.first_element(F.split(info.getItem("LT"), ",")).alias("trait_id"),
-        F.lit(taxon_id).cast("long").alias("taxon_id"),
+        F.col("taxon").cast("long").alias("taxon_id"),
     )
     return LoadResult(df)
 
@@ -287,8 +323,8 @@ def load_variants(spark: SparkSession, path: str, taxon_id: int = 9606) -> LoadR
 # ---------------------------------------------------------------------------
 
 
-def load_homologs(spark: SparkSession, path: str) -> LoadResult:
-    """Headered TSV → symmetric homolog rows.
+def load_homologs(spark: SparkSession, loads: list[tuple[str]]) -> LoadResult:
+    """Headered TSVs, one ``(path,)`` load each → symmetric homolog rows.
 
     src/import_homologs.py:88-150: header contract (V5 :97-103 — raises),
     extra-column warn (V4 :105-108), non-ORTHOLOGUE type warn-and-keep
@@ -298,7 +334,7 @@ def load_homologs(spark: SparkSession, path: str) -> LoadResult:
     policy in plans.pipeline.TABLES, applied to the union of all files.
     """
     raw, hdr_warnings = text_sources.read_headered_tsv(
-        spark, path, schemas.HOMOLOG_TSV_COLUMNS
+        spark, [path for path, in loads], schemas.HOMOLOG_TSV_COLUMNS
     )
     non_ortho = raw.filter(F.upper(F.trim(F.col("type"))) != "ORTHOLOGUE")
     fwd = raw.select(
@@ -341,43 +377,73 @@ def build_ontology(
 ) -> tuple[LoadResult, LoadResult, LoadResult]:
     """OBO + GAF → (on_terms, on_pairs, gene_ontology_map).
 
-    Mirrors src/import_ontology.py:312-349: all OBO files parse into one
-    term set; their is_a edges accumulate into ONE global graph before
-    closure (Q9 — module-global dict :54 accumulated across GO/MP/DO);
-    closure pairs materialize as on_pairs with relationship 'is_a'
-    (:132-140); per-ancestor descendant counts land on on_terms.count
-    (:141-145); GAF mappings filter by per-file taxon (F3 :297-299) and
-    dedup last-write-wins on (gene_id, ontology_id) — taxonid NOT in the
-    key (Q7 :175-183).
+    Mirrors src/import_ontology.py:312-349: all OBO files parse, in one
+    scan, into one term set; their is_a edges accumulate into ONE global
+    graph before closure (Q9 — module-global dict :54 accumulated across
+    GO/MP/DO); closure pairs materialize as on_pairs with relationship
+    'is_a' (:132-140); per-ancestor descendant counts land on
+    on_terms.count (:141-145); GAF mappings filter by per-file taxon (F3
+    :297-299) and dedup last-write-wins on (gene_id, ontology_id) — taxonid
+    NOT in the key (Q7 :175-183), the later load of ``gaf_loads`` winning.
+
+    The terms are collected ONCE (at most ``closure.EDGE_CAP`` of them)
+    and the rest runs on the driver, as the reference does: a repeated
+    term id raises ``LoadAborted`` naming it (X6, :212-224) before anything
+    is written, ``closure.descendants`` closes the is_a graph (cycles
+    raise), and on_terms / on_pairs go back through ``createDataFrame``.
     """
-    term_dfs = [obo.read_obo_terms(spark, p) for p in obo_paths]
-    terms_all = shape.accumulate(term_dfs)
-    # duplicate term id across files → X6 abort (reference :212-224)
-    io.assert_no_duplicates(terms_all.select("id"), ["id"], "on_terms")
-    edges = obo.obo_edges(terms_all)
-    pairs = closure_ops.transitive_closure(edges)
-    counts = closure_ops.descendant_counts(pairs)
-    on_terms = (
-        terms_all.select("id", "name", "namespace", "def")
-        .join(counts.withColumnRenamed("ancestor", "id"), "id", "left")
-        .withColumn("count", F.coalesce(F.col("count"), F.lit(0)))
+    terms = obo.read_obo_terms(spark, obo_paths).select(
+        "file", "id", "name", "namespace", "def", "is_a"
     )
-    on_pairs = pairs.select(
-        F.col("ancestor").alias("parent"),
-        F.col("descendant").alias("child"),
-        F.lit("is_a").alias("relationship"),
-    )
-    gaf_dfs = []
-    for i, (path, taxon) in enumerate(gaf_loads):
-        g = text_sources.read_gaf(spark, path)
-        g = g.filter(F.col("taxonid") == taxon).withColumn(
-            "__arrival", F.lit(i)
+    rows = _collect(terms.limit(closure_ops.EDGE_CAP + 1))
+    if len(rows) > closure_ops.EDGE_CAP:
+        raise ValueError(
+            f"build_ontology: more than {closure_ops.EDGE_CAP} terms; the "
+            "ontology is closed on the driver and is capped at that size"
         )
-        gaf_dfs.append(g)
-    gmap = shape.accumulate(gaf_dfs) if gaf_dfs else None
-    if gmap is not None:
+    # duplicate term id → X6 abort before any write (reference :212-224)
+    file_of: dict[str, str] = {}
+    for r in rows:
+        if r["id"] in file_of:
+            raise io.LoadAborted(
+                f"duplicate primary key in 'on_terms': {{'id': {r['id']!r}}} "
+                f"in {file_of[r['id']]} and {r['file']} (V2/X6 abort)"
+            )
+        file_of[r["id"]] = r["file"]
+    below = closure_ops.descendants(
+        (parent, r["id"]) for r in rows for parent in r["is_a"] if parent
+    )
+    import pandas as pd  # local: keep module import light
+
+    on_terms = spark.createDataFrame(
+        pd.DataFrame(
+            [
+                (r["id"], r["name"], r["namespace"], r["def"], len(below.get(r["id"], ())))
+                for r in rows
+            ],
+            columns=schemas.ON_TERMS.names,
+        ),
+        schemas.ON_TERMS,
+    )
+    on_pairs = spark.createDataFrame(
+        pd.DataFrame(
+            [(a, d, "is_a") for a, ds in below.items() for d in ds],
+            columns=schemas.ON_PAIRS.names,
+        ),
+        schemas.ON_PAIRS,
+    )
+    if gaf_loads:
+        arrival = text_sources.file_param(
+            spark, [(path, i) for i, (path, _) in enumerate(gaf_loads)]
+        )
+        taxa = F.array(*(F.lit(taxon) for _, taxon in gaf_loads))
+        gaf = text_sources.read_gaf(spark, [path for path, _ in gaf_loads]).withColumn(
+            "__arrival", arrival
+        )
         gmap = io.upsert_dedup(
-            gmap, schemas.GENE_ONTOLOGY_MAP_PK, arrival_col="__arrival"
+            gaf.filter(F.col("taxonid") == taxa[F.col("__arrival")]),
+            schemas.GENE_ONTOLOGY_MAP_PK,
+            arrival_col="__arrival",
         ).drop("__arrival")
     else:
         gmap = spark.createDataFrame([], schemas.GENE_ONTOLOGY_MAP)

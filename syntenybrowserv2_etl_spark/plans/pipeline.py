@@ -8,6 +8,21 @@ Spark jobs (submitted from threads — the scheduler interleaves their
 stages), and any validation failure fails the whole build (fail-fast,
 SURVEY §3.1 decision).
 
+A build is staged, checked, then published (SURVEY V2). Every family
+writes into ``<database>__staging`` beside the database; each ``unique``
+table's X6 key check reads the staged parquet's key columns; only when
+every family and check has passed does the build publish, by renaming the
+staging directory over the database (``build_database``) or moving the
+staged tables into it (the per-loader CLI). A failure deletes the staging
+directory and leaves the database exactly as it was. Each family's Spark
+jobs carry the description ``build:<family>``, and ``build_database``
+writes ``_build.json`` at the database root: rows, files and bytes per
+table and wall seconds per family.
+
+Each family builder reads all of its source files in one scan (see
+plans.loaders), so the whole family is one plan however many species or
+files it loads.
+
 ``TABLES`` is the one statement of how each output table is written: its
 partition column, its in-file sort columns and its primary-key policy.
 Genomic tables are partitioned by taxon and sorted within files by
@@ -20,13 +35,13 @@ the reference's 15 B-tree indexes' query workload (SURVEY §4). Every write
 from __future__ import annotations
 
 import concurrent.futures as cf
-import os
+import json
+import time
 from dataclasses import dataclass, field
 from typing import Literal
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..operators import shape
 from ..sources import io
 from .. import schemas
 from . import loaders
@@ -89,48 +104,44 @@ TABLES: dict[str, TablePlan] = {
 }
 
 
-def write_tables(
-    tables: dict[str, DataFrame], out_dir: str, mode: str = "overwrite"
-) -> dict[str, int]:
-    """Write a family's tables under ``out_dir`` by their ``TABLES`` plans;
-    returns {table: rows written}.
+def write_tables(tables: dict[str, DataFrame], out_dir: str) -> dict[str, int]:
+    """Write a family's tables under ``out_dir`` (a staging directory) by
+    their ``TABLES`` plans; returns {table: rows written}.
 
-    Every key check of the family runs before its first write, so a
-    duplicate key leaves none of the family's tables written (V2).
+    A ``unique`` table is checked right after its write, on the written
+    parquet's key columns (X6), so the check reads compact columns instead
+    of parsing the source text again; a duplicate raises ``LoadAborted``
+    naming the key, and the caller discards the staging directory.
     """
-    planned = []
+    written = {}
     for name, df in tables.items():
         plan = TABLES[name]
-        if plan.key == "unique":
-            io.assert_no_duplicates(df, plan.pk, name)
-        elif plan.key == "dedup":
+        if plan.key == "dedup":
             df = io.upsert_dedup(df, plan.pk)
-        planned.append((name, plan, df))
-    return {
-        name: io.write_table(
+        path = f"{out_dir}/{name}"
+        written[name] = io.write_table(
             df,
-            f"{out_dir}/{name}",
-            mode=mode,
+            path,
             partition_by=[plan.partition_by] if plan.partition_by else None,
             sort_within_by=list(plan.sort_within_by),
         )
-        for name, plan, df in planned
-    }
+        if plan.key == "unique":
+            staged = df.sparkSession.read.schema(df.schema).parquet(path)
+            io.assert_no_duplicates(staged.select(*plan.pk), plan.pk, name)
+    return written
 
 
 # ---------------------------------------------------------------------------
-# Table families — one per reference loader program. Each takes the loader's
-# arguments after ``spark``, one tuple per source file, and returns
-# {table: DataFrame}. Loaders are looked up on the module at call time.
+# Table families — one per reference loader program. Each takes the family's
+# loads, one tuple per source file, and returns {table: DataFrame}. Loaders
+# read all of a family's files in one scan and are looked up on the module at
+# call time.
 # ---------------------------------------------------------------------------
 
 
 def genes_exons(spark: SparkSession, loads: list[tuple]) -> dict[str, DataFrame]:
-    pairs = [loaders.load_genes_exons(spark, *args) for args in loads]
-    return {
-        "gene": shape.accumulate([g.df for g, _ in pairs]),
-        "exon": shape.accumulate([e.df for _, e in pairs]),
-    }
+    gene, exon = loaders.load_genes_exons(spark, loads)
+    return {"gene": gene.df, "exon": exon.df}
 
 
 def ontology(spark: SparkSession, loads: list[tuple]) -> dict[str, DataFrame]:
@@ -141,58 +152,99 @@ def ontology(spark: SparkSession, loads: list[tuple]) -> dict[str, DataFrame]:
     return {"on_terms": terms.df, "on_pairs": pairs.df, "gene_ontology_map": gmap.df}
 
 
-def _single_table(table: str, loader: str):
-    def family(spark: SparkSession, loads: list[tuple]) -> dict[str, DataFrame]:
-        load = getattr(loaders, loader)
-        return {table: shape.accumulate([load(spark, *args).df for args in loads])}
-
-    return family
-
-
 # CLI subcommand → family builder; each stands for one reference program
 # (import_genes_exons.py, import_synteny_blocks.py, import_cytogenetic_loc.py,
 # import_features.py, import_variants.py, import_homologs.py,
 # import_ontology.py).
 FAMILIES = {
     "genes-exons": genes_exons,
-    "synteny-blocks": _single_table("syntenic_block", "load_synteny_blocks"),
-    "cytobands": _single_table("cytogenetic_band", "load_cytobands"),
-    "features": _single_table("feature", "load_features"),
-    "variants": _single_table("snp_variant", "load_variants"),
-    "homologs": _single_table("homolog", "load_homologs"),
+    "synteny-blocks": lambda spark, loads: {
+        "syntenic_block": loaders.load_synteny_blocks(spark, loads).df
+    },
+    "cytobands": lambda spark, loads: {
+        "cytogenetic_band": loaders.load_cytobands(spark, loads).df
+    },
+    "features": lambda spark, loads: {"feature": loaders.load_features(spark, loads).df},
+    "variants": lambda spark, loads: {"snp_variant": loaders.load_variants(spark, loads).df},
+    "homologs": lambda spark, loads: {"homolog": loaders.load_homologs(spark, loads).df},
     "ontology": ontology,
 }
 
 
+def _stage(
+    spark: SparkSession, loads: dict[str, list[tuple]], staging: str
+) -> tuple[dict[str, int], dict[str, float]]:
+    """Build each family of ``loads`` into a fresh ``staging`` directory;
+    returns ({table: rows written}, {family: wall seconds}).
+
+    Independent families run concurrently: Spark's scheduler interleaves
+    their stages across the executor pool. Any exception fails the whole
+    build (fail-fast — unlike the reference shell, which ignores loader
+    failures) after deleting ``staging``.
+    """
+    sc = spark.sparkContext
+
+    def family(cmd: str) -> tuple[str, dict[str, int], float]:
+        t0 = time.perf_counter()
+        sc.setJobDescription(f"build:{cmd}")
+        try:
+            written = write_tables(FAMILIES[cmd](spark, loads[cmd]), staging)
+        finally:
+            sc.setJobDescription(None)
+        return cmd, written, time.perf_counter() - t0
+
+    io.delete(spark, staging)
+    rows: dict[str, int] = {}
+    wall: dict[str, float] = {}
+    try:
+        with cf.ThreadPoolExecutor(max_workers=max(1, len(loads))) as pool:
+            futures = [pool.submit(family, cmd) for cmd in loads]
+            for fut in cf.as_completed(futures):
+                cmd, written, seconds = fut.result()
+                rows.update(written)
+                wall[cmd] = seconds
+    except BaseException:
+        io.delete(spark, staging)
+        raise
+    return rows, wall
+
+
 def build_database(spark: SparkSession, inputs: PipelineInputs, out_dir: str) -> dict[str, int]:
-    """Build all nine tables under ``out_dir``; returns row counts."""
-    os.makedirs(out_dir, exist_ok=True)
+    """Build all nine tables and publish them as ``out_dir``; returns row
+    counts.
+
+    The build is staged in ``<out_dir>__staging`` and replaces ``out_dir``
+    by rename (``io.swap_in``) only once every family and key check has
+    passed; on any failure ``out_dir`` is left untouched. ``_build.json``
+    at the root records rows, files and bytes per table and wall seconds
+    per family.
+    """
     species = inputs.species
     loads = {
         "genes-exons": [(sp.genes_gff3, sp.taxon_id) for sp in species],
         "synteny-blocks": [(p,) for p in inputs.synteny_tsvs],
         "cytobands": [(sp.cytoband_gff3, sp.taxon_id) for sp in species if sp.cytoband_gff3],
         "features": [(sp.feature_gff3, sp.taxon_id) for sp in species if sp.feature_gff3],
-        "variants": [(p,) for p in inputs.vcf_paths],
+        # GWAS VCFs are human (reference src/import_variants.py)
+        "variants": [(p, 9606) for p in inputs.vcf_paths],
         "homologs": [(p,) for p in inputs.homolog_tsvs],
         "ontology": [(inputs.obo_paths, inputs.gaf_loads)] if inputs.obo_paths else [],
     }
-
-    def family(cmd: str) -> dict[str, int]:
-        if not loads[cmd]:
-            return {}
-        return write_tables(FAMILIES[cmd](spark, loads[cmd]), out_dir)
-
-    results: dict[str, int] = {}
-    # Independent table families run concurrently: Spark's FAIR-ish FIFO
-    # scheduler interleaves their stages across the executor pool. Any
-    # exception cancels the build (fail-fast — unlike the reference shell,
-    # which ignores loader failures).
-    with cf.ThreadPoolExecutor(max_workers=len(loads)) as pool:
-        futures = [pool.submit(family, cmd) for cmd in loads]
-        for fut in cf.as_completed(futures):
-            results.update(fut.result())
-    return results
+    out_dir = out_dir.rstrip("/")
+    staging = f"{out_dir}__staging"
+    rows, wall = _stage(spark, {cmd: ld for cmd, ld in loads.items() if ld}, staging)
+    try:
+        tables = {}
+        for name, n in sorted(rows.items()):
+            files = io.data_files(spark, f"{staging}/{name}")
+            tables[name] = {"rows": n, "files": len(files), "bytes": sum(b for _, b in files)}
+        families = {cmd: {"wall_s": round(s, 3)} for cmd, s in wall.items()}
+        report = json.dumps({"tables": tables, "families": families}, indent=1, sort_keys=True)
+        io.write_text(spark, f"{staging}/_build.json", report)
+        io.swap_in(spark, staging, out_dir)
+    finally:
+        io.delete(spark, staging)
+    return rows
 
 
 # ---------------------------------------------------------------------------
@@ -207,6 +259,9 @@ def main(argv: list[str] | None = None) -> dict[str, int]:
     <taxonid> [-c]`` etc., orchestrated by create_database.sh. Here
     ``<database>`` is a parquet directory; ``-c/--create`` = overwrite
     (the reference's DROP TABLE + CREATE, S9), default = append (S10).
+    The family is staged and checked like ``build_database``; then each
+    table replaces the live one (``-c``) or its files join the live
+    partition directories (append).
     Returns {table: rows written} (also printed, one line per table).
     """
     import argparse
@@ -250,7 +305,15 @@ def main(argv: list[str] | None = None) -> dict[str, int]:
 
     spark = get_spark("pipeline-cli")
     mode = "overwrite" if args.create else "append"
-    written = write_tables(FAMILIES[args.cmd](spark, [load]), args.database, mode)
+    database = args.database.rstrip("/")
+    staging = f"{database}__staging"
+    written, _ = _stage(spark, {args.cmd: [load]}, staging)
+    try:
+        publish = io.swap_in if args.create else io.move_into
+        for name in written:
+            publish(spark, f"{staging}/{name}", f"{database}/{name}")
+    finally:
+        io.delete(spark, staging)
     for name, n in written.items():
         print(f"{name}: {n} rows written ({mode})")
     return written

@@ -14,10 +14,14 @@ Spark-side equivalents:
     secondary indexes (SURVEY §4).
   - INSERT OR REPLACE → dedup BEFORE the write (upsert_dedup), for the
     tables whose catalogue key policy says so.
-  - transactionality → validate-then-write: the bad-row DataFrame is counted
-    first; only an empty one lets the write proceed. Parquet directory
-    commit via Spark's output committer is already atomic-enough for a
-    single writer; a staged tmp-dir + rename is used for multi-table runs.
+  - transactionality → stage, check, then publish by rename. A build
+    (plans.pipeline) writes every table into a staging directory beside
+    the database, runs the key checks there (``assert_no_duplicates`` on
+    the written parquet's key columns), and only when all pass publishes:
+    ``swap_in`` renames the staged directory over the live one,
+    ``move_into`` moves an append's staged files into the live table. On a
+    failure the staging directory is deleted and the live data is never
+    touched. Row-level aborts (V1/V2) raise before anything is written.
 """
 
 from __future__ import annotations
@@ -110,6 +114,85 @@ def write_table(
     return int(obs.get["rows"])
 
 
+def data_files(spark, path: str) -> list[tuple[str, int]]:
+    """(path, bytes) of every data file under ``path``, recursively;
+    names starting with ``_`` or ``.`` (committer markers, checksums) are
+    not data. Empty when ``path`` does not exist."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    root = hpath(path)
+    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(root):
+        return []
+    out = []
+    it = fs.listFiles(root, True)
+    while it.hasNext():
+        st = it.next()
+        if not st.getPath().getName().startswith(("_", ".")):
+            out.append((st.getPath().toString(), st.getLen()))
+    return out
+
+
+def delete(spark, path: str) -> None:
+    """Delete ``path`` recursively, if it exists."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    hpath(path).getFileSystem(spark._jsc.hadoopConfiguration()).delete(hpath(path), True)
+
+
+def swap_in(spark, staged: str, live: str) -> None:
+    """Publish directory ``staged`` as ``live`` by rename.
+
+    The live directory (if any) is renamed aside to ``<live>__old``, the
+    staged one takes its name, then the old copy is deleted — there is no
+    window where ``live`` is half-written (directory rename is the atomic
+    primitive). A failed promote restores the old directory; a crash
+    between the two renames leaves it recoverable under ``<live>__old``.
+    """
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    target, old = hpath(live), hpath(live + "__old")
+    fs = target.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs.delete(old, True)
+    fs.mkdirs(target.getParent())
+    had_live = fs.exists(target)
+    if had_live and not fs.rename(target, old):
+        raise IOError(f"could not move {live} aside")
+    if not fs.rename(hpath(staged), target):
+        if had_live:
+            fs.rename(old, target)
+        raise IOError(f"could not promote {staged} to {live}")
+    fs.delete(old, True)
+
+
+def move_into(spark, staged: str, live: str) -> None:
+    """Append the data files of table directory ``staged`` to ``live`` by
+    renaming each into the same relative (partition) directory. Spark names
+    part files uniquely per write, so they never collide with live ones. A
+    table not yet live is published whole, by ``swap_in``."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = hpath(live).getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(hpath(live)):
+        swap_in(spark, staged, live)
+        return
+    root = fs.makeQualified(hpath(staged)).toUri().getPath().rstrip("/")
+    for path, _ in data_files(spark, staged):
+        src = hpath(path)
+        rel = src.toUri().getPath()[len(root):]
+        dst = hpath(live.rstrip("/") + rel)
+        fs.mkdirs(dst.getParent())
+        if not fs.rename(src, dst):
+            raise IOError(f"could not move {path} into {live}")
+
+
+def write_text(spark, path: str, text: str) -> None:
+    """Write (or replace) a small UTF-8 file through the Hadoop FS API."""
+    hpath = spark._jvm.org.apache.hadoop.fs.Path
+    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
+    out = fs.create(hpath(path), True)
+    try:
+        out.write(bytearray(text.encode("utf-8")))
+    finally:
+        out.close()
+
+
 def write_bucketed(
     df: DataFrame,
     table_name: str,
@@ -170,12 +253,11 @@ def compact_table(
     doubles as a clustering pass (parquet min/max stats become selective
     — the write_table sort_within_by intent applied retroactively).
 
-    Swap discipline: the rewrite lands in a staging dir, the live dir is
-    renamed aside, staging renamed live, then the old data deleted —
-    there is no window where the table is missing or half-written
-    (directory rename is the atomic primitive; a crash between the two
-    renames leaves the old table recoverable under ``<path>__old``, and
-    a crash before any rename leaves the live table untouched).
+    Swap discipline (``swap_in``): the rewrite lands in a staging dir, the
+    live dir is renamed aside, staging renamed live, then the old data
+    deleted — there is no window where the table is missing or
+    half-written, and a crash before any rename leaves the live table
+    untouched.
 
     Returns (files_before, files_after).
 
@@ -217,30 +299,23 @@ def compact_table(
         )
     else:
         df = df.repartition(n_files)
-    staging, old = jvm_path(path + "__staging"), jvm_path(path + "__old")
-    fs.delete(staging, True)
-    fs.delete(old, True)
-    df.write.mode("overwrite").parquet(path + "__staging")
-    if not fs.rename(live, old):
-        raise IOError(f"compact_table: could not move {path} aside")
-    if not fs.rename(staging, live):
-        # restore the original table before failing
-        fs.rename(old, live)
-        raise IOError(f"compact_table: could not promote staging for {path}")
+    staging = path + "__staging"
+    fs.delete(jvm_path(staging), True)
+    df.write.mode("overwrite").parquet(staging)
     # carry the integrity manifest across the swap: its content hash is
     # order-insensitive, so a compaction (same rows, new layout) leaves it
     # VALID — dropping it would force a needless re-stamp
-    old_manifest = jvm_path(path + "__old/_manifest.json")
-    if fs.exists(old_manifest):
+    manifest = jvm_path(f"{path}/_manifest.json")
+    if fs.exists(manifest):
         spark._jvm.org.apache.hadoop.fs.FileUtil.copy(
             fs,
-            old_manifest,
+            manifest,
             fs,
-            jvm_path(f"{path}/_manifest.json"),
+            jvm_path(f"{staging}/_manifest.json"),
             False,
             spark._jsc.hadoopConfiguration(),
         )
-    fs.delete(old, True)
+    swap_in(spark, staging, path)
     return files_before, len(spark.read.parquet(path).inputFiles())
 
 
@@ -454,7 +529,7 @@ def fold_ib_partitions(
     - ``finalize_staging(staged_path)`` hook rebuilds any sidecar (e.g.
       the phrase index's ``_stats`` dictionary) from the folded data
       before the swap, so sidecar and data can never disagree.
-    - Staged-rename swap (same discipline as ``compact_table``): a crash
+    - Staged-rename swap (``swap_in``, as ``compact_table``): a crash
       leaves the old index live or recoverable under ``<path>__old``.
     """
     from pyspark.sql import functions as F
@@ -468,9 +543,7 @@ def fold_ib_partitions(
     folded = cur.filter(
         committed_ib_predicate(spark, path, base_ib)
     ).drop("__ib")
-    staging, old = hpath(path + "__staging"), hpath(path + "__old")
-    fs.delete(staging, True)
-    fs.delete(old, True)
+    fs.delete(hpath(path + "__staging"), True)
     (
         folded.withColumn("__ib", F.lit(base_ib).cast("long"))
         .repartition(partition_col)
@@ -489,14 +562,7 @@ def fold_ib_partitions(
             False,
             spark._jsc.hadoopConfiguration(),
         )
-    if not fs.rename(live, old):
-        raise IOError(f"fold_ib_partitions: could not move {path} aside")
-    if not fs.rename(staging, live):
-        fs.rename(old, live)
-        raise IOError(
-            f"fold_ib_partitions: could not promote staging for {path}"
-        )
-    fs.delete(old, True)
+    swap_in(spark, path + "__staging", path)
     return files_before, len(spark.read.parquet(path).inputFiles())
 
 
@@ -555,12 +621,7 @@ def write_with_manifest(df, path: str, mode: str = "overwrite") -> dict:
         "content_hash": int((int(agg["h"] or 0)) % (1 << 64)),
         "hash_version": 2,
     }
-    spark = df.sparkSession
-    hpath = spark._jvm.org.apache.hadoop.fs.Path
-    fs = hpath(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    out = fs.create(hpath(f"{path}/_manifest.json"), True)
-    out.write(bytearray(_json.dumps(manifest).encode("utf-8")))
-    out.close()
+    write_text(df.sparkSession, f"{path}/_manifest.json", _json.dumps(manifest))
     return manifest
 
 

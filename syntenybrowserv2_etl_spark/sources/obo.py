@@ -4,14 +4,15 @@ Reference: src/import_ontology.py:192-268 — a stateful line machine: `[Term]`
 starts a stanza, `key: value` lines accumulate, `is_a:` repeats, obsolete
 terms are discarded mid-stanza, and the final stanza is flushed at EOF.
 
-Each file is read WHOLE (``wholetext``: one file = one row = one task) and
-split into one row per stanza at every newline that is followed by ``[`` —
+All of the build's OBO files are read in ONE ``wholetext`` scan (one file =
+one row = one task) and each is split into one row per stanza at every newline that is followed by ``[`` —
 the same "a line starting with ``[`` opens a stanza" rule as the reference.
 Every key is then pulled out of its stanza's text with a multiline regex, so
 the plan is scan → generate → project → filter: no Window, no Aggregate and
 no Exchange. Ontology files are ≤ tens of MB (GO ~35 MB), far under the
 2 GB string cap, and ontology releases ship as files, so the file is the
-unit of parallelism.
+unit of parallelism. The ontology build (plans.loaders.build_ontology)
+collects the parsed terms once and does the rest on the driver.
 """
 
 from __future__ import annotations
@@ -32,8 +33,9 @@ def _value(key: str):
     return F.array_max(_values(key))
 
 
-def read_obo_terms(spark: SparkSession, path: str) -> DataFrame:
-    """Parse OBO → one row per non-obsolete [Term] stanza.
+def read_obo_terms(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """Parse the OBO files under ``paths`` → one row per non-obsolete
+    [Term] stanza.
 
     Output: (file, stanza, id, name, namespace, def, is_a ARRAY<STRING>)
     where ``stanza`` numbers the file's stanzas from 1 (the preamble is 0),
@@ -46,7 +48,7 @@ def read_obo_terms(spark: SparkSession, path: str) -> DataFrame:
     # text source and the file comes back line-split.
     # The leading newline makes chunk 0 the preamble (empty when the file
     # opens with a stanza), so the chunk position is the stanza number.
-    stanzas = spark.read.text(path, wholetext=True).select(
+    stanzas = spark.read.text(paths, wholetext=True).select(
         F.input_file_name().alias("file"),
         F.posexplode(
             F.split(F.concat(F.lit("\n"), "value"), r"\n(?=\[)")
@@ -66,18 +68,4 @@ def read_obo_terms(spark: SparkSession, path: str) -> DataFrame:
             ).alias("is_a"),
         )
         .filter(F.col("id").isNotNull())
-    )
-
-
-def obo_edges(terms: DataFrame) -> DataFrame:
-    """A1 — (child, parent) is_a edge DataFrame from parsed stanzas.
-
-    Reference holds this as a module-global dict-of-sets accumulated across
-    all three ontologies (src/import_ontology.py:54,248 — SURVEY Q9); here
-    the caller unions per-ontology term DataFrames before closure to match.
-    """
-    return (
-        terms.select(F.col("id").alias("child"), F.explode("is_a").alias("parent"))
-        .filter(F.col("parent").isNotNull() & (F.length("parent") > 0))
-        .distinct()
     )

@@ -5,6 +5,13 @@ schemas (never inferred) so Catalyst gets pushdown/pruning and the vectorized
 reader. Gzip (S1 — reference src/flex_open.py:10-20) is free: Spark infers
 the codec from the ``.gz`` suffix on any text-based source.
 
+Every reader takes the LIST of a table family's source paths (each a file,
+directory or glob) and returns ONE scan over all of them, so a family's
+plan is built, optimized and code-generated once, however many species or
+files it loads. Where a loader needs a per-file parameter (the taxon a
+GFF3 file was loaded for, a GAF file's arrival order), ``file_param``
+reads it off the row's source file.
+
 Scale posture: multi-file reads parallelize by file and by 128 MB split for
 splittable formats. Gzipped text is NOT splittable — one .gz = one task — so
 at 100 TB the ingest layer should receive many moderate .gz files (or
@@ -13,7 +20,7 @@ bgzip/zstd-seekable), which is exactly how genomics archives ship.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -58,8 +65,33 @@ def _list_files(spark: SparkSession, path: str) -> list[str]:
     return sorted(files)
 
 
-def first_lines(spark: SparkSession, path: str) -> list[tuple[str, str]]:
-    """Each file's FIRST physical line.
+def file_param(spark: SparkSession, loads: list[tuple[str, object]]) -> Column:
+    """Column: the parameter of the load whose path holds the row's file.
+
+    ``loads`` pairs each source path (file, directory or glob) with its
+    parameter. The file names come from each path's ``inputFiles()``,
+    the same strings ``input_file_name()`` gives a row of the scan, and
+    become the keys of ONE map literal, so any number of files costs one
+    constant in the plan. Evaluate the column in the scan's own stage
+    (before any exchange): ``input_file_name()`` is empty after a shuffle.
+
+    One scan reads each file once, so a file named by two loads has no
+    single parameter and is refused.
+    """
+    by_file: dict[str, object] = {}
+    for path, value in loads:
+        for f in spark.read.text(path).inputFiles():
+            if by_file.setdefault(f, value) != value:
+                raise SourceFormatError(
+                    f"{f}: loaded twice, for {by_file[f]!r} and {value!r}; "
+                    "a family's scan reads each file once"
+                )
+    lookup = F.create_map(*(F.lit(x) for kv in by_file.items() for x in kv))
+    return lookup[F.input_file_name()]
+
+
+def first_lines(spark: SparkSession, paths: list[str]) -> list[tuple[str, str]]:
+    """Each file's FIRST physical line, for every file under ``paths``.
 
     One ``spark.read.text(file).limit(1)`` per file, run from a small
     thread pool: the limit is pushed into the scan so only the head is
@@ -73,9 +105,9 @@ def first_lines(spark: SparkSession, path: str) -> list[tuple[str, str]]:
     """
     import concurrent.futures as cf
 
-    files = _list_files(spark, path)
+    files = sorted({f for p in paths for f in _list_files(spark, p)})
     if not files:
-        raise SourceFormatError(f"{path}: empty file")
+        raise SourceFormatError(f"{paths}: empty file")
 
     def head(f: str) -> tuple[str, str]:
         rows = spark.read.text(f).limit(1).collect()
@@ -85,7 +117,9 @@ def first_lines(spark: SparkSession, path: str) -> list[tuple[str, str]]:
         return list(pool.map(head, files))
 
 
-def read_gff3(spark: SparkSession, path: str, require_version_header: bool = False) -> DataFrame:
+def read_gff3(
+    spark: SparkSession, paths: list[str], require_version_header: bool = False
+) -> DataFrame:
     """S2/S3 — GFF3 as a 9-column DataFrame, comments skipped at scan.
 
     Reference: src/import_features.py:154-159 (hand-rolled split),
@@ -98,7 +132,7 @@ def read_gff3(spark: SparkSession, path: str, require_version_header: bool = Fal
     The check reads only the file heads (limit pushdown), not the data.
     """
     if require_version_header:
-        for fname, line in first_lines(spark, path):
+        for fname, line in first_lines(spark, paths):
             if not line.startswith("##gff-version 3"):
                 raise SourceFormatError(
                     f"{fname}: missing '##gff-version 3' header (V1 abort, "
@@ -109,13 +143,13 @@ def read_gff3(spark: SparkSession, path: str, require_version_header: bool = Fal
         .option("comment", "#")
         .option("emptyValue", "")
         .schema(schemas.GFF3_RAW)
-        .csv(path)
+        .csv(paths)
     )
 
 
 def read_headered_tsv(
     spark: SparkSession,
-    path: str,
+    paths: list[str],
     expected_columns: list[str],
     header_prefix: str = "##",
 ) -> tuple[DataFrame, dict[str, DataFrame]]:
@@ -136,7 +170,7 @@ def read_headered_tsv(
     """
     canonical: list[str] | None = None
     extra_rows: list[tuple[str, str]] = []
-    for fname, raw_header in first_lines(spark, path):
+    for fname, raw_header in first_lines(spark, paths):
         if raw_header.startswith(header_prefix):
             raw_header = raw_header[len(header_prefix):]
         cols = [transforms_norm(c) for c in raw_header.split("\t")]
@@ -171,7 +205,7 @@ def read_headered_tsv(
         # names/types come from the explicit schema (enforceSchema default)
         .option("header", "true")
         .schema(schema)
-        .csv(path)
+        .csv(paths)
     )
     return body, warnings
 
@@ -181,13 +215,13 @@ def transforms_norm(cell: str) -> str:
     return cell.strip().lower()
 
 
-def read_headerless_tsv(spark: SparkSession, path: str, schema) -> DataFrame:
+def read_headerless_tsv(spark: SparkSession, paths: list[str], schema) -> DataFrame:
     """S5 — positional headerless TSV (synteny blocks, 10 columns).
 
     Reference: src/import_synteny_blocks.py:90-94. Blank lines (F6) are
     dropped by the CSV reader's all-null filter below.
     """
-    df = spark.read.option("sep", "\t").schema(schema).csv(path)
+    df = spark.read.option("sep", "\t").schema(schema).csv(paths)
     non_null = None
     for name in df.columns:
         cond = F.col(name).isNotNull()
@@ -195,7 +229,7 @@ def read_headerless_tsv(spark: SparkSession, path: str, schema) -> DataFrame:
     return df.filter(non_null)
 
 
-def read_vcf(spark: SparkSession, path: str) -> DataFrame:
+def read_vcf(spark: SparkSession, paths: list[str]) -> DataFrame:
     """S6 — VCF: 8 fixed columns + INFO → MapType + ALT → ArrayType.
 
     Reference: src/import_variants.py:78-93 via PyVCF. Header/meta lines
@@ -206,7 +240,7 @@ def read_vcf(spark: SparkSession, path: str) -> DataFrame:
         spark.read.option("sep", "\t")
         .option("comment", "#")
         .schema(schemas.VCF_RAW)
-        .csv(path)
+        .csv(paths)
     )
     return raw.select(
         "chrom",
@@ -222,7 +256,7 @@ def read_vcf(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def read_gaf(spark: SparkSession, path: str) -> DataFrame:
+def read_gaf(spark: SparkSession, paths: list[str]) -> DataFrame:
     """S8 — GAF annotation TSV; ``!`` comment lines skipped at scan.
 
     Reference: src/import_ontology.py:286-300.
@@ -231,7 +265,7 @@ def read_gaf(spark: SparkSession, path: str) -> DataFrame:
         spark.read.option("sep", "\t")
         .option("comment", "!")
         .schema(schemas.GAF_RAW)
-        .csv(path)
+        .csv(paths)
         .select(
             F.trim(F.col(schemas.GAF_GENE_ID_COL)).alias("gene_id"),
             F.trim(F.col(schemas.GAF_TERM_COL)).alias("ontology_id"),

@@ -16,7 +16,7 @@ from syntenybrowserv2_etl_spark.sources import io, text_sources
 
 def test_genes_exons(spark, fixtures_dir):
     genes_res, exons_res = loaders.load_genes_exons(
-        spark, f"{fixtures_dir}/genes.gff3", 10090
+        spark, [(f"{fixtures_dir}/genes.gff3", 10090)]
     )
     genes = {r["gene_id"]: r.asDict() for r in genes_res.df.collect()}
     # G4 has no Dbxref → skipped (V3); G1-G3 survive.
@@ -53,7 +53,7 @@ def test_genes_exons_fk_joins(spark, fixtures_dir):
     """The §2.7 implied join exon.parent_gene = gene.gene_id must be
     non-empty on the engine's own tables (the round-1 X1 defect)."""
     genes_res, exons_res = loaders.load_genes_exons(
-        spark, f"{fixtures_dir}/genes.gff3", 10090
+        spark, [(f"{fixtures_dir}/genes.gff3", 10090)]
     )
     joined = exons_res.df.join(
         genes_res.df,
@@ -63,7 +63,7 @@ def test_genes_exons_fk_joins(spark, fixtures_dir):
 
 
 def test_synteny_blocks(spark, fixtures_dir):
-    res = loaders.load_synteny_blocks(spark, f"{fixtures_dir}/synteny.tsv")
+    res = loaders.load_synteny_blocks(spark, [(f"{fixtures_dir}/synteny.tsv",)])
     rows = res.df.collect()
     # 4 input rows → ×2 symmetric (X3) = 8. Rows 1 and 4 share a PK in
     # both directions; the last-write-wins dedup that drops them to 6 is
@@ -82,11 +82,82 @@ def test_synteny_blocks(spark, fixtures_dir):
 
 def test_synteny_bad_prefix_aborts(spark, fixtures_dir):
     with pytest.raises(io.LoadAborted):
-        loaders.load_synteny_blocks(spark, f"{fixtures_dir}/synteny_bad.tsv")
+        loaders.load_synteny_blocks(spark, [(f"{fixtures_dir}/synteny_bad.tsv",)])
+
+
+def test_synteny_bad_prefix_names_file_and_block(spark, fixtures_dir):
+    """The V2 abort says which file and which block broke the rule."""
+    with pytest.raises(io.LoadAborted, match=r"synteny_bad\.tsv: .*'BADPREFIX'"):
+        loaders.load_synteny_blocks(
+            spark,
+            [(f"{fixtures_dir}/synteny.tsv",), (f"{fixtures_dir}/synteny_bad.tsv",)],
+        )
+
+
+def _gff3(path, rows):
+    path.write_text(
+        "##gff-version 3\n" + "".join("\t".join(r) + "\n" for r in rows)
+    )
+    return str(path)
+
+
+def test_genes_exons_gff_ids_collide_across_files(spark, tmp_path):
+    """GFF ``ID``s are unique only within a file: two species' files that
+    both use gene:G1 / exon:E1 keep each exon on its own file's gene."""
+    files = []
+    for taxon, dbxref in ((10090, "MGI:1"), (10116, "RGD:1")):
+        files.append((_gff3(tmp_path / f"genes_{taxon}.gff3", [
+            ("chr1", "src", "gene", "100", "900", ".", "+", ".",
+             f"ID=gene:G1;Symbol=S{taxon};Dbxref={dbxref}"),
+            ("chr1", "src", "exon", "100", "200", ".", "+", ".",
+             "ID=exon:E1;Parent=gene:G1"),
+        ]), taxon))
+    gene, exon = loaders.load_genes_exons(spark, files)
+    assert {(r["gene_id"], r["gene_taxonid"]) for r in gene.df.collect()} == {
+        ("MGI:1", 10090), ("RGD:1", 10116)
+    }
+    assert sorted(
+        (r["exon_id"], r["parent_gene"], r["taxonid"]) for r in exon.df.collect()
+    ) == [("exon:E1", "MGI:1", 10090), ("exon:E1", "RGD:1", 10116)]
+
+
+def test_three_species_family_equals_per_file_union(spark, fixtures_dir, tmp_path):
+    """One scan over three species' files gives exactly the rows of the
+    three single-file loads, with each file's own taxon."""
+    import shutil
+
+    def loads_of(name):
+        out = []
+        for taxon in (10090, 10116, 9606):
+            dst = tmp_path / f"{taxon}_{name}"
+            shutil.copy(f"{fixtures_dir}/{name}", dst)
+            out.append((str(dst), taxon))
+        return out
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    genes, cyto, feats = (loads_of(n) for n in ("genes.gff3", "cytobands.gff3", "features.gff3"))
+    gene, exon = loaders.load_genes_exons(spark, genes)
+    singles = [loaders.load_genes_exons(spark, [ld]) for ld in genes]
+    assert rows(gene.df) == sorted(r for g, _ in singles for r in rows(g.df))
+    assert rows(exon.df) == sorted(r for _, e in singles for r in rows(e.df))
+    assert len(rows(exon.df)) == 12
+    for load, family in ((loaders.load_cytobands, cyto), (loaders.load_features, feats)):
+        together = load(spark, family).df
+        assert rows(together) == sorted(r for ld in family for r in rows(load(spark, [ld]).df))
+        assert {r["taxon_id"] for r in together.collect()} == {10090, 10116, 9606}
+
+
+def test_file_param_refuses_a_file_loaded_twice(spark, fixtures_dir):
+    """One scan reads each file once, so one file cannot carry two taxa."""
+    path = f"{fixtures_dir}/cytobands.gff3"
+    with pytest.raises(text_sources.SourceFormatError, match="loaded twice"):
+        loaders.load_cytobands(spark, [(path, 10090), (path, 10116)])
 
 
 def test_cytobands(spark, fixtures_dir):
-    res = loaders.load_cytobands(spark, f"{fixtures_dir}/cytobands.gff3", 9606)
+    res = loaders.load_cytobands(spark, [(f"{fixtures_dir}/cytobands.gff3", 9606)])
     rows = {r["id"]: r.asDict() for r in res.df.collect()}
     assert set(rows) == {"p36.33", "p36.32", "p25.3"}
     assert rows["p36.33"]["start"] == 1  # 1-based preserved (P9/Q6)
@@ -96,7 +167,7 @@ def test_cytobands(spark, fixtures_dir):
 
 
 def test_features(spark, fixtures_dir):
-    res = loaders.load_features(spark, f"{fixtures_dir}/features.gff3", 10090)
+    res = loaders.load_features(spark, [(f"{fixtures_dir}/features.gff3", 10090)])
     rows = sorted([r.asDict() for r in res.df.collect()], key=lambda r: r["id"])
     # CDS + match blacklisted (F2); QTL:3 duplicate keeps first (X7)
     assert [r["id"] for r in rows] == ["QTL:1", "QTL:2", "QTL:3"]
@@ -111,11 +182,11 @@ def test_features(spark, fixtures_dir):
 
 def test_features_bad_version_aborts(spark, fixtures_dir):
     with pytest.raises(text_sources.SourceFormatError):
-        loaders.load_features(spark, f"{fixtures_dir}/features_badversion.gff3", 10090)
+        loaders.load_features(spark, [(f"{fixtures_dir}/features_badversion.gff3", 10090)])
 
 
 def test_variants(spark, fixtures_dir):
-    res = loaders.load_variants(spark, f"{fixtures_dir}/gwas.vcf", 9606)
+    res = loaders.load_variants(spark, [(f"{fixtures_dir}/gwas.vcf", 9606)])
     rows = res.df.collect()
     # rs1 explodes to 2 genes (X2); rs2 1; rs3 has no CG → explode_outer keeps 1
     assert len(rows) == 4
@@ -133,7 +204,7 @@ def test_variants(spark, fixtures_dir):
 
 
 def test_homologs(spark, fixtures_dir):
-    res = loaders.load_homologs(spark, f"{fixtures_dir}/homologs.tsv")
+    res = loaders.load_homologs(spark, [(f"{fixtures_dir}/homologs.tsv",)])
     rows = res.df.collect()
     # 4 rows → ×2 = 8; the H1/M1 duplicate pair stays until the table's
     # last-write-wins key policy (X5) drops it to 6 at write time
@@ -150,7 +221,7 @@ def test_homologs(spark, fixtures_dir):
 
 def test_homologs_missing_column_fails(spark, fixtures_dir):
     with pytest.raises(text_sources.SourceFormatError):
-        loaders.load_homologs(spark, f"{fixtures_dir}/homologs_missingcol.tsv")
+        loaders.load_homologs(spark, [(f"{fixtures_dir}/homologs_missingcol.tsv",)])
 
 
 def test_headered_tsv_per_file_contract(spark, tmp_path):
@@ -161,7 +232,7 @@ def test_headered_tsv_per_file_contract(spark, tmp_path):
     d.mkdir()
     (d / "f1.tsv").write_text("##A\tB\nA\t1\nx\t2\n")
     (d / "f2.tsv").write_text("##A\tB\ny\t3\n")
-    body, warnings = text_sources.read_headered_tsv(spark, str(d), ["a", "b"])
+    body, warnings = text_sources.read_headered_tsv(spark, [str(d)], ["a", "b"])
     rows = {(r["a"], r["b"]) for r in body.collect()}
     # the ("A", "1") data row — first cell equals the header name — is KEPT
     assert rows == {("A", "1"), ("x", "2"), ("y", "3")}
@@ -169,7 +240,7 @@ def test_headered_tsv_per_file_contract(spark, tmp_path):
 
     (d / "f3.tsv").write_text("##B\tA\nz\t4\n")  # same set, different order
     with pytest.raises(text_sources.SourceFormatError):
-        text_sources.read_headered_tsv(spark, str(d), ["a", "b"])
+        text_sources.read_headered_tsv(spark, [str(d)], ["a", "b"])
 
 
 def test_first_lines_many_file_glob(spark, tmp_path):
@@ -197,7 +268,7 @@ def test_first_lines_many_file_glob(spark, tmp_path):
     (d / "part_nonl.tsv").write_text("##only_line\tcol")
     expect[str(d / "part_nonl.tsv")] = "##only_line\tcol"
 
-    got = text_sources.first_lines(spark, str(d))
+    got = text_sources.first_lines(spark, [str(d)])
     assert len(got) == len(expect)
     for fname, line in got:
         key = fname[len("file:"):] if fname.startswith("file:") else fname
@@ -206,7 +277,7 @@ def test_first_lines_many_file_glob(spark, tmp_path):
 
 def test_headered_tsv_extras_warning_channel(spark, fixtures_dir):
     """V4 extras flow through LoadResult.warnings, not a bare print."""
-    res = loaders.load_homologs(spark, f"{fixtures_dir}/homologs_extracol.tsv")
+    res = loaders.load_homologs(spark, [(f"{fixtures_dir}/homologs_extracol.tsv",)])
     extras = {
         (r["column"],) for r in res.warnings["extra_columns"].collect()
     }

@@ -3,6 +3,8 @@ multimodal, streaming."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -89,6 +91,30 @@ def test_closure_no_edges(spark):
         ("ancestor", "string"),
         ("descendant", "string"),
     ]
+
+
+def test_descendants_order_ignores_hash_seed():
+    """The walk's output order (and so the row order, and the part files,
+    of on_pairs) depends on the edges alone, not on the hash seed that
+    orders a Python set of strings."""
+    import subprocess
+    import sys
+
+    prog = (
+        "from syntenybrowserv2_etl_spark.operators.closure import descendants\n"
+        "edges = [(f'GO:{i // 7}', f'GO:{i + 1}') for i in range(400)]\n"
+        "print([(a, list(ds)) for a, ds in descendants(edges).items()])\n"
+    )
+    outs = {
+        subprocess.run(
+            [sys.executable, "-c", prog],
+            env={**os.environ, "PYTHONHASHSEED": seed},
+            cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            capture_output=True, text=True, check=True,
+        ).stdout
+        for seed in ("1", "2", "3")
+    }
+    assert len(outs) == 1
 
 
 def test_closure_job_count(spark):

@@ -121,6 +121,123 @@ def test_build_database_single_computation(spark, fixtures_dir, tmp_path, monkey
     }
 
 
+def _fixture_inputs(fixtures_dir, genes_gff3=None):
+    return pipeline.PipelineInputs(
+        species=[
+            pipeline.SpeciesInputs(
+                taxon_id=10090,
+                genes_gff3=genes_gff3 or f"{fixtures_dir}/genes.gff3",
+                cytoband_gff3=f"{fixtures_dir}/cytobands.gff3",
+                feature_gff3=f"{fixtures_dir}/features.gff3",
+            )
+        ],
+        synteny_tsvs=[f"{fixtures_dir}/synteny.tsv"],
+        homolog_tsvs=[f"{fixtures_dir}/homologs.tsv"],
+        vcf_paths=[f"{fixtures_dir}/gwas.vcf"],
+        obo_paths=[f"{fixtures_dir}/onto.obo"],
+        gaf_loads=[(f"{fixtures_dir}/annotations.gaf", 10090)],
+    )
+
+
+def _snapshot(root):
+    """{relative path: file bytes} of every file under ``root``."""
+    import os
+
+    out = {}
+    for d, _, names in os.walk(root):
+        for n in names:
+            full = os.path.join(d, n)
+            with open(full, "rb") as f:
+                out[os.path.relpath(full, root)] = f.read()
+    return out
+
+
+def _dup_gene_gff3(fixtures_dir, tmp_path):
+    """genes.gff3 plus a second top-level feature keyed MGI:101 on chr1."""
+    text = open(f"{fixtures_dir}/genes.gff3").read()
+    dup = "chr1\tENSEMBL\tgene\t8000\t9000\t.\t+\t.\tID=gene:G9;Dbxref=MGI:101\n"
+    path = tmp_path / "genes_dup.gff3"
+    path.write_text(text + dup)
+    return str(path)
+
+
+def test_failed_build_leaves_previous_database(spark, fixtures_dir, tmp_path):
+    """A duplicate gene key (X6) aborts the build naming the key; the
+    database already at ``out_dir`` stays byte-identical and no staging or
+    set-aside directory is left behind."""
+    import os
+
+    from syntenybrowserv2_etl_spark.sources import io
+
+    out = str(tmp_path / "db")
+    pipeline.build_database(spark, _fixture_inputs(fixtures_dir), out)
+    before = _snapshot(out)
+    bad = _fixture_inputs(fixtures_dir, _dup_gene_gff3(fixtures_dir, tmp_path))
+    with pytest.raises(io.LoadAborted, match="'gene'.*'MGI:101'"):
+        pipeline.build_database(spark, bad, out)
+    assert _snapshot(out) == before
+    assert sorted(os.listdir(tmp_path)) == ["db", "genes_dup.gff3"]
+
+
+def test_cli_failed_append_leaves_table_unchanged(spark, fixtures_dir, tmp_path):
+    """A CLI append (S10) whose staged rows fail the X6 check moves nothing
+    into the live table."""
+    import os
+
+    from syntenybrowserv2_etl_spark.sources import io
+
+    out = str(tmp_path / "db")
+    pipeline.main(["genes-exons", out, f"{fixtures_dir}/genes.gff3", "10090", "-c"])
+    before = _snapshot(out)
+    bad = _dup_gene_gff3(fixtures_dir, tmp_path)
+    with pytest.raises(io.LoadAborted, match="MGI:101"):
+        pipeline.main(["genes-exons", out, bad, "10116"])
+    assert _snapshot(out) == before
+    assert sorted(os.listdir(tmp_path)) == ["db", "genes_dup.gff3"]
+    # a good append lands its files in the live partition directories
+    pipeline.main(["genes-exons", out, f"{fixtures_dir}/genes.gff3", "10116"])
+    assert sorted(d for d in os.listdir(f"{out}/gene") if "=" in d) == [
+        "gene_taxonid=10090", "gene_taxonid=10116"
+    ]
+    assert spark.read.parquet(f"{out}/exon").count() == 8
+
+
+def test_build_report(spark, fixtures_dir, tmp_path):
+    """``_build.json``: rows per table equal the returned counts; files and
+    bytes equal a walk of each table's data files; every family has a wall
+    time, and its Spark jobs carry the description ``build:<family>``."""
+    import json
+    import os
+
+    store = spark.sparkContext._jsc.sc().statusStore()
+
+    def jobs():  # the status store's jobs, newest first (a Scala Seq)
+        seq = store.jobsList(None)
+        return [seq.apply(i) for i in range(seq.size())]
+
+    first_job = max([j.jobId() for j in jobs()] or [-1]) + 1
+    out = str(tmp_path / "db")
+    counts = pipeline.build_database(spark, _fixture_inputs(fixtures_dir), out)
+    with open(f"{out}/_build.json") as f:
+        report = json.load(f)
+    assert {t: r["rows"] for t, r in report["tables"].items()} == counts
+    for table, r in report["tables"].items():
+        sizes = [
+            os.path.getsize(os.path.join(d, n))
+            for d, _, names in os.walk(f"{out}/{table}")
+            for n in names
+            if not n.startswith(("_", "."))
+        ]
+        assert (r["files"], r["bytes"]) == (len(sizes), sum(sizes)), table
+    assert set(report["families"]) == set(pipeline.FAMILIES)
+    assert all(f["wall_s"] > 0 for f in report["families"].values())
+    tags = set()
+    for job in jobs():
+        if job.jobId() >= first_job and job.description().isDefined():
+            tags.add(job.description().get())
+    assert {f"build:{fam}" for fam in pipeline.FAMILIES} <= tags
+
+
 def test_build_bench_small_deterministic(spark, monkeypatch, capsys):
     """The build-benchmark generator + 9-table build is deterministic end
     to end: seeded input synthesis at 1/10 scale (~170k input lines)

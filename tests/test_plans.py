@@ -335,11 +335,32 @@ def test_obo_parse_is_shuffle_free(spark):
     from syntenybrowserv2_etl_spark.sources import obo
 
     path = os.path.join(os.path.dirname(__file__), "fixtures", "onto.obo")
-    df = obo.read_obo_terms(spark, path)
+    df = obo.read_obo_terms(spark, [path])
     assert len(df.collect()) == 6
     p = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in p
     assert "Window" not in p
+
+
+def test_gene_plan_one_scan_for_three_files(spark, tmp_path):
+    """A gene family of three species' GFF3 files plans ONE file scan over
+    all three and no Union: the per-file taxon comes from the row's file."""
+    import os
+    import shutil
+
+    from syntenybrowserv2_etl_spark.plans import loaders
+
+    fixture = os.path.join(os.path.dirname(__file__), "fixtures", "genes.gff3")
+    loads = []
+    for taxon in (10090, 10116, 9606):
+        dst = str(tmp_path / f"genes_{taxon}.gff3")
+        shutil.copy(fixture, dst)
+        loads.append((dst, taxon))
+    gene, _ = loaders.load_genes_exons(spark, loads)
+    qe = gene.df._jdf.queryExecution()
+    assert qe.executedPlan().toString().count("FileScan") == 1
+    assert "Union" not in qe.optimizedPlan().toString()
+    assert gene.df.count() == 9
 
 
 def test_span_dedup_winner_uses_window_group_limit(spark):

@@ -140,7 +140,7 @@ def test_obo_parse_matches_line_machine(spark, preamble, stanzas, eol, final_eol
             f.write(text)
         got = sorted(
             (r["stanza"], r["id"], r["name"], r["namespace"], r["def"], list(r["is_a"]))
-            for r in obo.read_obo_terms(spark, path).collect()
+            for r in obo.read_obo_terms(spark, [path]).collect()
         )
     assert got == py_obo(text)
 

@@ -391,6 +391,10 @@ def build_ontology(
     term id raises ``LoadAborted`` naming it (X6, :212-224) before anything
     is written, ``closure.descendants`` closes the is_a graph (cycles
     raise), and on_terms / on_pairs go back through ``createDataFrame``.
+    Each is written as ONE file (``coalesce(1)``): ``createDataFrame``
+    slices to the default parallelism, but the rows are already on the
+    driver and bounded by the cap, so more files buy no parallelism and
+    each would repeat its dictionaries and footer.
     """
     terms = obo.read_obo_terms(spark, obo_paths).select(
         "file", "id", "name", "namespace", "def", "is_a"
@@ -424,14 +428,14 @@ def build_ontology(
             columns=schemas.ON_TERMS.names,
         ),
         schemas.ON_TERMS,
-    )
+    ).coalesce(1)
     on_pairs = spark.createDataFrame(
         pd.DataFrame(
             [(a, d, "is_a") for a, ds in below.items() for d in ds],
             columns=schemas.ON_PAIRS.names,
         ),
         schemas.ON_PAIRS,
-    )
+    ).coalesce(1)
     if gaf_loads:
         arrival = text_sources.file_param(
             spark, [(path, i) for i, (path, _) in enumerate(gaf_loads)]

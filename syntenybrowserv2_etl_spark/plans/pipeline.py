@@ -17,7 +17,8 @@ staged tables into it (the per-loader CLI). A failure deletes the staging
 directory and leaves the database exactly as it was. Each family's Spark
 jobs carry the description ``build:<family>``, and ``build_database``
 writes ``_build.json`` at the database root: rows, files and bytes per
-table and wall seconds per family.
+table, wall seconds per family, and the size of the whole database
+against its source files (``input_bytes``, ``bytes_per_input_byte``).
 
 Each family builder reads all of its source files in one scan (see
 plans.loaders), so the whole family is one plan however many species or
@@ -42,7 +43,7 @@ from typing import Literal
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources import io
+from ..sources import io, text_sources
 from .. import schemas
 from . import loaders
 
@@ -216,8 +217,9 @@ def build_database(spark: SparkSession, inputs: PipelineInputs, out_dir: str) ->
     The build is staged in ``<out_dir>__staging`` and replaces ``out_dir``
     by rename (``io.swap_in``) only once every family and key check has
     passed; on any failure ``out_dir`` is left untouched. ``_build.json``
-    at the root records rows, files and bytes per table and wall seconds
-    per family.
+    at the root records rows, files and bytes per table, wall seconds per
+    family, the summed size of the source files (``input_bytes``) and the
+    tables' data bytes over it (``bytes_per_input_byte``).
     """
     species = inputs.species
     loads = {
@@ -239,7 +241,26 @@ def build_database(spark: SparkSession, inputs: PipelineInputs, out_dir: str) ->
             files = io.data_files(spark, f"{staging}/{name}")
             tables[name] = {"rows": n, "files": len(files), "bytes": sum(b for _, b in files)}
         families = {cmd: {"wall_s": round(s, 3)} for cmd, s in wall.items()}
-        report = json.dumps({"tables": tables, "families": families}, indent=1, sort_keys=True)
+        sources = [
+            *(p for sp in species for p in (sp.genes_gff3, sp.cytoband_gff3, sp.feature_gff3) if p),
+            *inputs.synteny_tsvs,
+            *inputs.homolog_tsvs,
+            *inputs.vcf_paths,
+            *inputs.obo_paths,
+            *(p for p, _ in inputs.gaf_loads),
+        ]
+        in_bytes = text_sources.input_bytes(spark, sources)
+        data_bytes = sum(t["bytes"] for t in tables.values())
+        report = json.dumps(
+            {
+                "tables": tables,
+                "families": families,
+                "input_bytes": in_bytes,
+                "bytes_per_input_byte": data_bytes / in_bytes if in_bytes else None,
+            },
+            indent=1,
+            sort_keys=True,
+        )
         io.write_text(spark, f"{staging}/_build.json", report)
         io.swap_in(spark, staging, out_dir)
     finally:

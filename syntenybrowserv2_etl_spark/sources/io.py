@@ -11,7 +11,10 @@ Spark-side equivalents:
   - overwrite/append → parquet write modes (write_table), with the partition
     and in-file sort columns that plans.pipeline.TABLES gives each table, so
     parquet min/max row-group stats stand in for the reference's 15
-    secondary indexes (SURVEY §4).
+    secondary indexes (SURVEY §4). Database tables are written zstd-
+    compressed with the Parquet v2 writer, whose delta encodings store the
+    sorted positions and prefixed ids compactly; the session's own codec,
+    which every other write uses, is left alone.
   - INSERT OR REPLACE → dedup BEFORE the write (upsert_dedup), for the
     tables whose catalogue key policy says so.
   - transactionality → stage, check, then publish by rename. A build
@@ -72,9 +75,10 @@ def assert_no_duplicates(df: DataFrame, pk: list[str], table: str) -> None:
     """X6 — duplicate-as-error: PK collision aborts the entire load.
 
     Reference: src/import_genes_exons.py:120-126,130-136 (IntegrityError →
-    rollback + abort). Implemented as a pre-write check: group by PK, any
-    count > 1 ⇒ raise. ``limit(1)`` keeps the failure probe cheap — AQE
-    stops the scan early once one offending group is found.
+    rollback + abort). A build runs it after the write, on the staged
+    parquet's key columns (plans.pipeline.write_tables), so nothing is
+    published until it passes: group by PK, any count > 1 ⇒ raise, naming
+    the first offending key found.
     """
     dup = df.groupBy(*pk).count().filter(F.col("count") > 1).limit(1).collect()
     if dup:
@@ -97,6 +101,13 @@ def write_table(
     answer range predicates — the Spark analogue of the reference's
     (taxonid, chr, start) B-tree indexes (src/import_genes_exons.py:58-62).
 
+    Every file is zstd-compressed and written by the Parquet v2 writer. Its
+    data pages fall back from a dictionary to DELTA_BINARY_PACKED (longs)
+    and DELTA_BYTE_ARRAY (strings), which store sorted positions and
+    shared-prefix ids as small deltas; snappy and v1 pages (the session
+    defaults) store them nearly raw. Both are per-write options, so only
+    the database's tables change, not the session's other writes.
+
     Returns the number of rows written, measured by an ``Observation``
     attached to the write job itself — NOT a second ``df.count()`` action,
     which would recompute the whole loader DAG (at 100 TB, doubling build
@@ -107,7 +118,11 @@ def write_table(
     df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
     if sort_within_by:
         df = df.sortWithinPartitions(*sort_within_by)
-    writer = df.write.mode(mode)
+    writer = (
+        df.write.mode(mode)
+        .option("compression", "zstd")
+        .option("parquet.writer.version", "v2")
+    )
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)

@@ -20,6 +20,7 @@ bgzip/zstd-seekable), which is exactly how genomics archives ship.
 
 from __future__ import annotations
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -32,8 +33,9 @@ class SourceFormatError(ValueError):
     """Raised by precondition checks (V1/V5 hard-abort channels)."""
 
 
-def _list_files(spark: SparkSession, path: str) -> list[str]:
-    """Expand a file/dir/glob path to its data files via the Hadoop FS API.
+def _file_statuses(spark: SparkSession, path: str) -> list:
+    """Expand a file/dir/glob path to the Hadoop ``FileStatus`` of each of
+    its data files.
 
     Mirrors Spark's own listing rules: directories expand one level, names
     starting with ``_`` or ``.`` (committer metadata) are skipped. Listing
@@ -47,7 +49,7 @@ def _list_files(spark: SparkSession, path: str) -> list[str]:
     matches = fs.globStatus(jpath)
     if matches is None:
         raise SourceFormatError(f"{path}: no such file")
-    files: list[str] = []
+    files = []
 
     def keep(p) -> bool:
         name = p.getName()
@@ -56,13 +58,20 @@ def _list_files(spark: SparkSession, path: str) -> list[str]:
     for st in matches:
         if st.isDirectory():
             files += [
-                sub.getPath().toString()
-                for sub in fs.listStatus(st.getPath())
-                if sub.isFile() and keep(sub.getPath())
+                sub for sub in fs.listStatus(st.getPath()) if sub.isFile() and keep(sub.getPath())
             ]
         elif st.isFile() and keep(st.getPath()):
-            files.append(st.getPath().toString())
-    return sorted(files)
+            files.append(st)
+    return files
+
+
+def input_bytes(spark: SparkSession, paths: list[str]) -> int:
+    """Summed size of the distinct data files under ``paths`` (a listing;
+    no data is read)."""
+    sizes = {
+        st.getPath().toString(): st.getLen() for p in paths for st in _file_statuses(spark, p)
+    }
+    return sum(sizes.values())
 
 
 def file_param(spark: SparkSession, loads: list[tuple[str, object]]) -> Column:
@@ -98,14 +107,17 @@ def first_lines(spark: SparkSession, paths: list[str]) -> list[tuple[str, str]]:
     decompressed/read (codec-safe for .gz), "first" is first by
     construction, and the read goes through the same Hadoop filesystem
     stack as the real load. This is one Spark job per file, sized for the
-    few-file globs a genomics load passes.
+    few-file globs a genomics load passes. The pool's threads inherit the
+    caller's Spark local properties and tags (``inheritable_thread_target``),
+    so the probe jobs carry the caller's job description, e.g. a build's
+    ``build:<family>``.
 
     Empty files yield ``""`` (they then fail the caller's header check,
     which is the right V1/V5 outcome).
     """
     import concurrent.futures as cf
 
-    files = sorted({f for p in paths for f in _list_files(spark, p)})
+    files = sorted({st.getPath().toString() for p in paths for st in _file_statuses(spark, p)})
     if not files:
         raise SourceFormatError(f"{paths}: empty file")
 
@@ -114,7 +126,7 @@ def first_lines(spark: SparkSession, paths: list[str]) -> list[tuple[str, str]]:
         return (f, rows[0]["value"] if rows else "")
 
     with cf.ThreadPoolExecutor(max_workers=min(8, len(files))) as pool:
-        return list(pool.map(head, files))
+        return list(pool.map(inheritable_thread_target(spark)(head), files))
 
 
 def read_gff3(

@@ -204,23 +204,30 @@ def test_cli_failed_append_leaves_table_unchanged(spark, fixtures_dir, tmp_path)
 
 def test_build_report(spark, fixtures_dir, tmp_path):
     """``_build.json``: rows per table equal the returned counts; files and
-    bytes equal a walk of each table's data files; every family has a wall
-    time, and its Spark jobs carry the description ``build:<family>``."""
+    bytes equal a walk of each table's data files; input_bytes is the
+    fixture sources' summed size and bytes_per_input_byte the data bytes
+    over it; every family has a wall time, and EVERY Spark job of the
+    build carries the description ``build:<family>`` (head probes run on
+    pool threads included)."""
     import json
     import os
 
-    store = spark.sparkContext._jsc.sc().statusStore()
+    sc = spark.sparkContext._jsc.sc()
+    store = sc.statusStore()
 
     def jobs():  # the status store's jobs, newest first (a Scala Seq)
+        sc.listenerBus().waitUntilEmpty()  # the store is fed asynchronously
         seq = store.jobsList(None)
         return [seq.apply(i) for i in range(seq.size())]
 
     first_job = max([j.jobId() for j in jobs()] or [-1]) + 1
     out = str(tmp_path / "db")
-    counts = pipeline.build_database(spark, _fixture_inputs(fixtures_dir), out)
+    inputs = _fixture_inputs(fixtures_dir)
+    counts = pipeline.build_database(spark, inputs, out)
     with open(f"{out}/_build.json") as f:
         report = json.load(f)
     assert {t: r["rows"] for t, r in report["tables"].items()} == counts
+    data_bytes = 0
     for table, r in report["tables"].items():
         sizes = [
             os.path.getsize(os.path.join(d, n))
@@ -229,13 +236,93 @@ def test_build_report(spark, fixtures_dir, tmp_path):
             if not n.startswith(("_", "."))
         ]
         assert (r["files"], r["bytes"]) == (len(sizes), sum(sizes)), table
+        data_bytes += sum(sizes)
+    sp = inputs.species[0]
+    sources = [sp.genes_gff3, sp.cytoband_gff3, sp.feature_gff3, *inputs.synteny_tsvs,
+               *inputs.homolog_tsvs, *inputs.vcf_paths, *inputs.obo_paths,
+               inputs.gaf_loads[0][0]]
+    input_bytes = sum(os.path.getsize(p) for p in sources)
+    assert report["input_bytes"] == input_bytes
+    assert report["bytes_per_input_byte"] == data_bytes / input_bytes
     assert set(report["families"]) == set(pipeline.FAMILIES)
     assert all(f["wall_s"] > 0 for f in report["families"].values())
-    tags = set()
-    for job in jobs():
-        if job.jobId() >= first_job and job.description().isDefined():
-            tags.add(job.description().get())
-    assert {f"build:{fam}" for fam in pipeline.FAMILIES} <= tags
+    tags = {
+        job.jobId(): job.description().get() if job.description().isDefined() else None
+        for job in jobs()
+        if job.jobId() >= first_job
+    }
+    families = {f"build:{fam}" for fam in pipeline.FAMILIES}
+    assert {j: d for j, d in tags.items() if d not in families} == {}
+    assert set(tags.values()) == families
+
+
+def _parquet_files(root):
+    import os
+
+    return [os.path.join(d, n) for d, _, names in os.walk(root) for n in names
+            if n.endswith(".parquet")]
+
+
+def _assert_zstd(files):
+    """Every column chunk of every file is zstd-compressed."""
+    import pyarrow.parquet as pq
+
+    assert files
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        for g in range(md.num_row_groups):
+            for c in range(md.num_columns):
+                assert md.row_group(g).column(c).compression == "ZSTD", f
+
+
+def test_database_layout(spark, fixtures_dir, tmp_path):
+    """The built database is zstd-compressed throughout; a sorted long
+    column is delta-encoded (Parquet v2 writer); on_terms and on_pairs are
+    one file each; DuckDB reads all ten tables, with their hive partition
+    columns, to the same rows as Spark."""
+    import duckdb
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "db")
+    pipeline.build_database(spark, _fixture_inputs(fixtures_dir), out)
+    _assert_zstd(_parquet_files(out))
+    for f in _parquet_files(f"{out}/gene"):
+        md = pq.ParquetFile(f).metadata
+        col = md.schema.names.index("gene_start_pos")
+        encodings = md.row_group(0).column(col).encodings
+        assert any(e.startswith("DELTA_") for e in encodings), (f, encodings)
+    assert len(_parquet_files(f"{out}/on_terms")) == 1
+    assert len(_parquet_files(f"{out}/on_pairs")) == 1
+    con = duckdb.connect()
+    for name in pipeline.TABLES:
+        df = spark.read.parquet(f"{out}/{name}")
+        cols = ", ".join(f'"{c}"' for c in df.columns)
+        got = con.execute(
+            f"SELECT {cols} FROM read_parquet('{out}/{name}/**/*.parquet', "
+            "hive_partitioning = true)"
+        ).fetchall()
+        want = [tuple(r) for r in df.collect()]
+        assert want and sorted(got, key=repr) == sorted(want, key=repr), name
+
+
+def test_cli_append_reads_back_whole(spark, fixtures_dir, tmp_path):
+    """A CLI append (S10) onto the live table adds zstd files beside the
+    live ones, and Spark and DuckDB both read every row of both loads."""
+    import duckdb
+
+    out = str(tmp_path / "db")
+    gff = f"{fixtures_dir}/genes.gff3"
+    pipeline.main(["genes-exons", out, gff, "10090", "-c"])
+    pipeline.main(["genes-exons", out, gff, "10116"])
+    _assert_zstd(_parquet_files(f"{out}/gene"))
+    by_taxon = {10090: 3, 10116: 3}
+    gene = spark.read.parquet(f"{out}/gene")
+    assert {r[0]: r[1] for r in gene.groupBy("gene_taxonid").count().collect()} == by_taxon
+    got = duckdb.connect().execute(
+        f"SELECT gene_taxonid, count(*) FROM read_parquet('{out}/gene/**/*.parquet', "
+        "hive_partitioning = true) GROUP BY 1"
+    ).fetchall()
+    assert dict(got) == by_taxon
 
 
 def test_build_bench_small_deterministic(spark, monkeypatch, capsys):

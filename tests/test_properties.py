@@ -13,7 +13,7 @@ import os
 import re
 import tempfile
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -844,9 +844,13 @@ def test_snapshot_diff_matches_dict_diff(spark, old, new):
         unique_by=lambda r: r[0],
     )
 )
+# 345/32 = 10.78125 exactly: a half at the rounding digit, which Spark's
+# round takes up (10.7813) and Python's round to even (10.7812)
+@example(rows=[(0, 15), (5, 10), (32, 0)])
 @settings(**SETTINGS)
 def test_time_weighted_avg_matches_bruteforce(spark, rows):
     import datetime as dt
+    from decimal import ROUND_HALF_UP, Decimal
 
     from syntenybrowserv2_etl_spark.operators import timeseries as tsx
 
@@ -871,7 +875,9 @@ def test_time_weighted_avg_matches_bruteforce(spark, rows):
         assert out == []
     else:
         assert len(out) == 1
-        assert out[0]["twavg"] == round(num / den, 4)
+        # F.round on a double rounds its decimal form half up
+        want = Decimal(repr(num / den)).quantize(Decimal("0.0001"), ROUND_HALF_UP)
+        assert out[0]["twavg"] == float(want)
         assert out[0]["span_us"] == den
 
 

@@ -116,12 +116,10 @@ CURATION = [
     "q90_ivf_pq",
     "q91_setsim_prefix_join",
     "q92_stat_aggregates",
-    "q93_media_text_match",
     # round 7 additions
     "q94_scd2_apply",
     "q95_leakage_free_split",
     "q96_best_of_cluster",
-    "q97_audio_frames",
     "q98_session_examples",
     # round 8 additions
     "q99_triangle_counts",
@@ -195,29 +193,6 @@ EXPENSIVE_EXACT_DEMOS = [
 FLAG_THRESHOLD = 1.3
 # A committed per-query value below this is timer noise, not signal.
 MIN_SIGNAL_SEC = 0.2
-
-# Queries whose wall time is dominated by in-Python construction of their
-# synthetic media fixture INSIDE the timed region (caching it across passes
-# would be forbidden precomputation, so it stays timed — VERDICT r17 #8:
-# label it so flag adjudication doesn't chase fixture noise as an engine
-# regression). Tagged in BENCH_DETAIL as fixture_bound.
-FIXTURE_BOUND = [
-    "q40_multimodal_features",
-    "q93_media_text_match",
-    "q97_audio_frames",
-    "q143_image_stats",
-    "q168_jpeg_stats",
-    "q169_image_dedup",
-    "q170_audio_dedup",
-    "q171_jpeg420_stats",
-    "q172_apng_frames",
-    "q173_scene_changes",
-    "q174_jpeg_subsampled_stats",
-    "q175_video_dedup",
-    "q176_jpeg_multiscan_stats",
-    "q177_jpeg_progressive_stats",
-    "q178_video_neardup_hamming",
-]
 
 
 def _bench_round(repo: str, prev: dict | None) -> tuple[int, int]:
@@ -523,7 +498,8 @@ def main() -> None:
         "sf": sf,
         "headline15_sec": round(sum(times[n] for n in HEADLINE), 3),
         # suite83 minus its five demo-lane members (definitional break,
-        # round 17 — module docstring)
+        # round 17 — module docstring); the name is kept for the history,
+        # though it sums 76 queries since q93 and q97 were deleted
         "suite78_prod_sec": round(
             sum(times[n] for n in HEADLINE + CURATION if n not in demos), 3
         ),
@@ -555,11 +531,10 @@ def main() -> None:
             "normalized_regressions_ge_1p3": confirmed,
         },
         "recent": recent,
-        # round 18 additions (VERDICT r17 #2/#8) — observability only, no
+        # round 18 additions (VERDICT r17 #2) — observability only, no
         # timing-path change: per-query job/stage/task counts from the
-        # untimed warm-up pass, and the fixture-bound media tag.
+        # untimed warm-up pass.
         "tasks": task_stats,
-        "fixture_bound": FIXTURE_BOUND,
         "round": this_round,
         "n_correctness_files": n_corr,
     }

@@ -14,7 +14,7 @@ Layout:
     functions/    column-level transforms (SURVEY P1-P13, F1-F6) + hashing
     sources/      file-format readers (GFF3, TSV, VCF, OBO, GAF) + writers
     operators/    shape ops, transitive closure, range join, dedup,
-                  similarity search, text analysis, multimodal plumbing
+                  similarity search, text analysis
     plans/        the seven loaders + full-pipeline driver
     streaming/    Structured Streaming over event streams
     queries.py    demo-query registry (Spark callable + DuckDB oracle SQL)

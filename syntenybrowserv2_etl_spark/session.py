@@ -30,8 +30,9 @@ def get_spark(
     - ``spark.sql.adaptive.*``: AQE re-plans joins at runtime (broadcast
       conversion when a side turns out small, skew-join splitting for hot
       keys such as a mega-chromosome or a stopword-heavy token).
-    - Arrow enabled: every pandas interop path (mapInPandas operators in
-      operators/multimodal.py) moves columnar batches, not pickled rows.
+    - Arrow enabled: every pandas interop path (the mapInPandas operators,
+      the closure's pairs handed back through ``createDataFrame``) moves
+      columnar batches, not pickled rows.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))

@@ -268,6 +268,12 @@ def compact_table(
     doubles as a clustering pass (parquet min/max stats become selective
     — the write_table sort_within_by intent applied retroactively).
 
+    The rewrite goes through ``write_table``, so it keeps the database's
+    zstd + Parquet v2 files, and it is partitioned by the columns the
+    table's ``name=value`` directories already name (a taxon-partitioned
+    table stays taxon-partitioned). Each partition value lands in as few
+    tasks as the file count allows, so it gets few files.
+
     Swap discipline (``swap_in``): the rewrite lands in a staging dir, the
     live dir is renamed aside, staging renamed live, then the old data
     deleted — there is no window where the table is missing or
@@ -306,17 +312,21 @@ def compact_table(
             )
     summary = fs.getContentSummary(live)
     n_files = max(1, math.ceil(summary.getLength() / (target_mb * 1024 * 1024)))
-    files_before = len(spark.read.parquet(path).inputFiles())
     df = spark.read.parquet(path)
+    files = df.inputFiles()
+    files_before = len(files)
+    # partition columns: the name=value directories between the table root
+    # and a data file
+    root = fs.makeQualified(live).toUri().getPath().rstrip("/")
+    rel = jvm_path(files[0]).toUri().getPath()[len(root) + 1 :] if files else ""
+    parts = [seg.split("=", 1)[0] for seg in rel.split("/")[:-1]]
     if sort_within_by:
-        df = df.repartitionByRange(n_files, *sort_within_by).sortWithinPartitions(
-            *sort_within_by
-        )
+        df = df.repartitionByRange(n_files, *parts, *sort_within_by)
     else:
-        df = df.repartition(n_files)
+        df = df.repartition(n_files, *parts)
     staging = path + "__staging"
     fs.delete(jvm_path(staging), True)
-    df.write.mode("overwrite").parquet(staging)
+    write_table(df, staging, partition_by=parts, sort_within_by=sort_within_by)
     # carry the integrity manifest across the swap: its content hash is
     # order-insensitive, so a compaction (same rows, new layout) leaves it
     # VALID — dropping it would force a needless re-stamp

@@ -222,3 +222,16 @@ def test_demo_lane_members_are_registered():
     for name in bench.EXPENSIVE_EXACT_DEMOS:
         assert name in q.REGISTRY
         assert q.REGISTRY[name].oracle is not None
+
+
+def test_bench_name_lists_are_registered():
+    """Every query bench.py names is registered: a name left behind by a
+    deleted query would raise KeyError in ``suite78_prod_sec``'s sum or
+    in the calibration probe."""
+    from syntenybrowserv2_etl_spark import queries as q
+
+    for name in (
+        bench.HEADLINE + bench.CURATION + bench.CALIBRATION
+        + bench.EXPENSIVE_EXACT_DEMOS
+    ):
+        assert name in q.REGISTRY, name

@@ -1,5 +1,5 @@
 """Operator-level contracts: closure, range joins, dedup, similarity, text,
-multimodal, streaming."""
+streaming."""
 
 from __future__ import annotations
 
@@ -11,7 +11,6 @@ from pyspark.sql import functions as F
 from syntenybrowserv2_etl_spark.operators import (
     closure as closure_ops,
     dedup as dedup_ops,
-    multimodal,
     range_join as rj,
     similarity as sim_ops,
     text as text_ops,
@@ -418,33 +417,6 @@ def test_fingerprint_order_insensitive(spark):
     assert fp[1] == fp[2] != fp[3]
 
 
-# --- multimodal ------------------------------------------------------------
-
-
-def test_multimodal_features(spark):
-    media = multimodal.synthetic_media(spark, 12)
-    out = multimodal.extract_features(media).collect()
-    assert len(out) == 12
-    for r in out:
-        assert len(r["feature"]) == 8
-        assert r["n_bytes"] >= 128
-    # deterministic across runs
-    again = multimodal.extract_features(media).collect()
-    assert sorted([tuple(r["feature"]) for r in out]) == sorted(
-        [tuple(r["feature"]) for r in again]
-    )
-
-
-def test_frame_sample_plan(spark):
-    media = multimodal.synthetic_media(spark, 12)
-    plan = multimodal.frame_sample_plan(media, every_ms=1000)
-    rows = plan.collect()
-    assert all(r["sample_ms"] % 1000 == 0 for r in rows)
-    vids = media.filter(F.col("kind") == "video").collect()
-    expected = sum(v["duration_ms"] // 1000 + 1 for v in vids)
-    assert len(rows) == expected
-
-
 # --- as-of join ------------------------------------------------------------
 
 
@@ -681,26 +653,6 @@ def test_quantize_int8_bounds_and_reconstruction(spark):
     r = out[1]
     for v, c in zip([0.5, -1.0, 0.25, 0.0], r["codes"]):
         assert abs(v - c * r["scale"]) <= r["scale"] / 2 + 1e-12
-
-
-def test_multimodal_resize(spark):
-    media = multimodal.synthetic_media(spark, 12)
-    out = {r["media_id"]: r for r in multimodal.resize_images(media, 224, 224).collect()}
-    src = {r["media_id"]: r for r in media.collect()}
-    assert set(out) == set(src)  # schema-in = schema-out, row-for-row
-    for mid, r in out.items():
-        if r["kind"] == "image":
-            assert (r["width"], r["height"]) == (224, 224)
-            assert r["payload"] != src[mid]["payload"]  # re-encoded
-        else:  # non-images pass through untouched
-            assert r["payload"] == src[mid]["payload"]
-            assert r["width"] == src[mid]["width"]
-    # composes with downstream media ops (same contract)
-    feats = multimodal.extract_features(multimodal.resize_images(media)).collect()
-    assert len(feats) == 12
-    # deterministic
-    again = {r["media_id"]: r["payload"] for r in multimodal.resize_images(media, 224, 224).collect()}
-    assert {m: r["payload"] for m, r in out.items()} == again
 
 
 def test_winnowing_shared_substring_guarantee(spark):
@@ -1315,1269 +1267,6 @@ def test_bloom_incremental_null_text_is_new(spark):
     assert out == {7: (True, True), 8: (False, False), 9: (False, False)}
 
 
-# --- real PNG/WAV decode kernels (round 6) ---------------------------------
-
-
-def _make_png(w, h, pixel_rows, ctype=2, filters=None):
-    """Minimal PNG encoder for test fixtures: 8-bit, non-interlaced.
-    pixel_rows = list of rows, each a bytes of w*channels samples;
-    filters = per-row filter type (default all 0)."""
-    import struct
-    import zlib
-
-    def chunk(typ, body):
-        return (
-            struct.pack(">I", len(body))
-            + typ
-            + body
-            + struct.pack(">I", zlib.crc32(typ + body) & 0xFFFFFFFF)
-        )
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, ctype, 0, 0, 0)
-    filters = filters or [0] * h
-    raw = b"".join(bytes([f]) + bytes(row) for f, row in zip(filters, pixel_rows))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _make_wav(samples, n_ch=1, rate=8000):
-    import struct
-
-    pcm = struct.pack(f"<{len(samples)}h", *samples)
-    fmt = struct.pack("<HHIIHH", 1, n_ch, rate, rate * n_ch * 2, n_ch * 2, 16)
-    data = b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    data += b"data" + struct.pack("<I", len(pcm)) + pcm
-    return b"RIFF" + struct.pack("<I", len(data)) + data
-
-
-def test_png_decode_real_exact_channel_means():
-    """A 2x2 RGB PNG with known pixels decodes to exact channel means and
-    quadrant luminances — a REAL inflate + unfilter, not the stub."""
-    # pixels: (255,0,0) (0,255,0) / (0,0,255) (255,255,255)
-    rows = [bytes([255, 0, 0, 0, 255, 0]), bytes([0, 0, 255, 255, 255, 255])]
-    png = _make_png(2, 2, rows)
-    f = multimodal.decode_real(png, "image")
-    # channel means: R=(255+0+0+255)/4, G=(0+255+0+255)/4, B=(0+0+255+255)/4
-    assert f[:4] == [510 / 4 / 255.0, 510 / 4 / 255.0, 510 / 4 / 255.0, 0.0]
-    # quadrants (2x2: each pixel its own quadrant): luminance = mean(RGB)
-    assert f[4:] == [
-        85 / 255.0,  # top-left (255,0,0)
-        85 / 255.0,  # top-right (0,255,0)
-        85 / 255.0,  # bottom-left (0,0,255)
-        255 / 255.0,  # bottom-right white
-    ]
-
-
-def test_png_decode_real_unfilters_sub_and_up():
-    """Filter types 1 (Sub) and 2 (Up) reconstruct exactly: an image
-    encoded with them must decode to the same pixels as filter 0."""
-    rows = [bytes([10, 20, 30, 40, 50, 60]), bytes([15, 25, 35, 45, 55, 65])]
-    plain = multimodal._png_decode(_make_png(2, 2, rows))
-    # Sub row 0: first pixel raw, second = delta from first (per channel)
-    sub_row0 = bytes([10, 20, 30, (40 - 10) % 256, (50 - 20) % 256, (60 - 30) % 256])
-    # Up row 1: delta from row 0
-    up_row1 = bytes([(15 - 10) % 256, (25 - 20) % 256, (35 - 30) % 256,
-                     (45 - 40) % 256, (55 - 50) % 256, (65 - 60) % 256])
-    filtered = multimodal._png_decode(
-        _make_png(2, 2, [sub_row0, up_row1], filters=[1, 2])
-    )
-    assert filtered == plain
-
-
-def test_wav_decode_real_exact_rms():
-    """A constant-amplitude PCM16 WAV decodes to exact per-segment RMS."""
-    wav = _make_wav([16384] * 64)
-    f = multimodal.decode_real(wav, "audio")
-    assert f == [0.5] * 8
-    # structure checks on the parser itself
-    n_ch, rate, samples = multimodal._wav_decode(wav)
-    assert (n_ch, rate, len(samples)) == (1, 8000, 64)
-
-
-def test_extract_features_with_real_decoder(spark):
-    """The real kernels run end-to-end through the Arrow mapInPandas path:
-    PNG and WAV payloads produce their exact features; an unknown
-    container raises through (the documented seam)."""
-    png = _make_png(2, 2, [bytes([255, 0, 0, 0, 255, 0]),
-                           bytes([0, 0, 255, 255, 255, 255])])
-    wav = _make_wav([16384] * 64)
-    media = spark.createDataFrame(
-        [
-            (1, "image", png, 2, 2, None, "png"),
-            (2, "audio", wav, None, None, 8, "pcm"),
-        ],
-        schema=multimodal.MEDIA_SCHEMA,
-    )
-    out = {
-        r["media_id"]: r
-        for r in multimodal.extract_features(
-            media, decoder=multimodal.decode_real
-        ).collect()
-    }
-    assert out[1]["n_bytes"] == len(png)
-    assert [round(x, 6) for x in out[1]["feature"][:3]] == [0.5] * 3
-    assert [round(x, 6) for x in out[2]["feature"]] == [0.5] * 8
-    # stub path unchanged (q40 oracle): same media through default kernel
-    stub = multimodal.extract_features(media).collect()
-    assert len(stub) == 2
-
-
-def test_decode_real_malformed_payloads_raise_clean_errors():
-    """Malformed payloads that pass the magic check must surface as
-    ValueError/NotImplementedError (classifiable bad-payload), never raw
-    KeyError/TypeError/struct.error that would kill the Spark task."""
-    import pytest as _pt
-    import struct
-    import zlib
-
-    def chunk(typ, body):
-        return (
-            struct.pack(">I", len(body)) + typ + body
-            + struct.pack(">I", zlib.crc32(typ + body) & 0xFFFFFFFF)
-        )
-
-    magic = b"\x89PNG\r\n\x1a\n"
-    # invalid color type 5 -> ValueError, not KeyError
-    bad_ctype = magic + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 5, 0, 0, 0))
-    with _pt.raises(ValueError, match="color type"):
-        multimodal._png_decode(bad_ctype)
-    # no IHDR at all -> ValueError, not TypeError on w=None
-    with _pt.raises(ValueError, match="IHDR"):
-        multimodal._png_decode(magic + chunk(b"IEND", b""))
-    # truncated IDAT -> ValueError, not IndexError in the unfilter loop
-    good = _make_png(2, 2, [bytes([1] * 6), bytes([2] * 6)])
-    ihdr = magic + chunk(b"IHDR", struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0))
-    short = ihdr + chunk(b"IDAT", zlib.compress(b"\x00" + bytes(6))) + chunk(b"IEND", b"")
-    with _pt.raises(ValueError, match="truncated"):
-        multimodal._png_decode(short)
-    # garbage IDAT bytes -> ValueError, not zlib.error
-    corrupt = ihdr + chunk(b"IDAT", b"\xde\xad\xbe\xef") + chunk(b"IEND", b"")
-    with _pt.raises(ValueError, match="IDAT"):
-        multimodal._png_decode(corrupt)
-    assert multimodal._png_decode(good)  # the helpers themselves are fine
-    # IHDR body shorter than the 13 declared bytes -> ValueError, not struct.error
-    trunc_ihdr = magic + struct.pack(">I", 13) + b"IHDR" + b"\x00" * 5
-    with _pt.raises(ValueError, match="IHDR"):
-        multimodal._png_decode(trunc_ihdr)
-    # zero-dimension image -> ValueError here, not ZeroDivisionError downstream
-    zero = magic + chunk(b"IHDR", struct.pack(">IIBBBBB", 0, 0, 8, 2, 0, 0, 0))
-    with _pt.raises(ValueError, match="zero-dimension"):
-        multimodal._png_decode(zero)
-    # IDAT inflating past the IHDR-declared volume -> ValueError (bomb guard)
-    bomb = (
-        ihdr
-        + chunk(b"IDAT", zlib.compress(b"\x00" * 1_000_000))
-        + chunk(b"IEND", b"")
-    )
-    with _pt.raises(ValueError, match="inflates past"):
-        multimodal._png_decode(bomb)
-    # WAV fmt chunk with a short body -> ValueError, not struct.error
-    short_fmt = (
-        b"RIFF" + struct.pack("<I", 16) + b"WAVE"
-        + b"fmt " + struct.pack("<I", 4) + b"\x01\x00\x02\x00"
-    )
-    with _pt.raises(ValueError, match="fmt"):
-        multimodal._wav_decode(short_fmt)
-
-
-def test_jpeg_roundtrip_block_constant_exact():
-    """The q168 exactness construction: grayscale block-constant pixels
-    with even offsets from 128 survive encode→decode BIT-EXACTLY (DC
-    quantizes losslessly, AC vanish) — through the full real codec
-    (FDCT, Huffman encode, marker stream, Huffman decode, IDCT)."""
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    w, h = 24, 32
-    pix = bytes(
-        128 + 2 * ((5 * 31 + (x // 8) * 7 + (y // 8) * 13) % 60) - 60
-        for y in range(h)
-        for x in range(w)
-    )
-    w2, h2, ch, out = mm._jpeg_decode(mm._jpeg_encode(w, h, 1, pix))
-    assert (w2, h2, ch) == (w, h, 1)
-    assert out == pix
-
-
-def test_jpeg_roundtrip_gradients_within_quant_error():
-    """General (inexact) paths — AC coefficients, run-lengths, byte
-    stuffing, non-multiple-of-8 dimensions, RGB/YCbCr — reconstruct
-    within a small per-pixel bound (Annex-K tables keep smooth gradients
-    within a few levels)."""
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    w, h = 21, 13  # deliberately not multiples of 8 (edge replication)
-    gray = bytes((x * 5 + y * 3) % 256 for y in range(h) for x in range(w))
-    _, _, ch, out = mm._jpeg_decode(mm._jpeg_encode(w, h, 1, gray))
-    assert ch == 1 and len(out) == w * h
-    assert max(abs(a - b) for a, b in zip(gray, out)) <= 8
-
-    rgb = bytes(
-        v
-        for y in range(h)
-        for x in range(w)
-        for v in ((x * 9) % 256, (y * 13) % 256, ((x + y) * 5) % 256)
-    )
-    w2, h2, ch3, out3 = mm._jpeg_decode(mm._jpeg_encode(w, h, 3, rgb))
-    assert (w2, h2, ch3) == (w, h, 3)
-    assert max(abs(a - b) for a, b in zip(rgb, out3)) <= 12
-
-
-def test_jpeg_codec_boundaries():
-    """Progressive (SOF2) and subsampled-chroma JPEGs stay behind
-    NotImplementedError (the documented codec seam); structural garbage
-    raises ValueError; decode_real dispatches JPEG by magic and keeps the
-    8-float contract."""
-    import pytest as _pt
-
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    base = mm._jpeg_encode(8, 8, 1, bytes([130] * 64))
-    # flip SOF0 -> SOF2: since round 16 progressive DECODES, so this
-    # hack now fails structurally (the baseline SOS has Se=63, illegal
-    # for a progressive DC scan) instead of hitting a blanket seam
-    prog = base.replace(b"\xff\xc0", b"\xff\xc2", 1)
-    with _pt.raises(ValueError, match="Se == 0"):
-        mm._jpeg_decode(prog)
-    # extended sequential (SOF1): identical semantics at 8-bit, decodes
-    # like SOF0 since round 16; 12-bit sample precision stays seamed,
-    # as do the hierarchical/arithmetic SOF codes
-    sof1 = base.replace(b"\xff\xc0", b"\xff\xc1", 1)
-    assert mm._jpeg_decode(sof1) == mm._jpeg_decode(base)
-    twelve = bytearray(sof1)
-    twelve[sof1.index(b"\xff\xc1") + 4] = 12
-    with _pt.raises(NotImplementedError, match="8-bit"):
-        mm._jpeg_decode(bytes(twelve))
-    with _pt.raises(NotImplementedError, match="SOF"):
-        mm._jpeg_decode(base.replace(b"\xff\xc0", b"\xff\xc3", 1))
-    # 16-bit (Pq=1) quant tables parse since round 16; a bad precision
-    # nibble is structural invalidity
-    import struct as _st
-
-    dqt_at = base.index(b"\xff\xdb")
-    ln = int.from_bytes(base[dqt_at + 2 : dqt_at + 4], "big")
-    body = base[dqt_at + 4 : dqt_at + 2 + ln]
-    body16 = bytes([0x10]) + b"".join(
-        _st.pack(">H", v) for v in body[1:]
-    )
-    wide = (
-        base[:dqt_at]
-        + _st.pack(">HH", 0xFFDB, len(body16) + 2)
-        + body16
-        + base[dqt_at + 2 + ln :]
-    )
-    assert mm._jpeg_decode(wide) == mm._jpeg_decode(base)
-    with _pt.raises(ValueError, match="DQT precision"):
-        mm._jpeg_decode(
-            base[: dqt_at + 4] + bytes([0x20]) + base[dqt_at + 5 :]
-        )
-    # review r16: a stream whose SOF references a never-defined quant
-    # table raises ValueError, not a bare KeyError escaping mapInPandas
-    with _pt.raises(ValueError, match="missing DQT"):
-        mm._jpeg_decode(base[:dqt_at] + base[dqt_at + 2 + ln :])
-    # 2x2-subsampled luminance: patch the SOF sampling byte (0x11 -> 0x22)
-    sof_at = base.index(b"\xff\xc0")
-    sub = bytearray(base)
-    sub[sof_at + 11] = 0x22  # marker(2) + len(2) + P(1) + Y(2) + X(2) + Nf(1) + Cid(1)
-    with _pt.raises(NotImplementedError, match="subsampl"):
-        mm._jpeg_decode(bytes(sub))
-    with _pt.raises(ValueError, match="not a JPEG"):
-        mm._jpeg_decode(b"\x00\x11" + base)
-    with _pt.raises(ValueError):
-        mm._jpeg_decode(base[:40])  # truncated mid-headers
-    # a scan sequence that leaves components never coded (here: the SOS
-    # hacked to a luma-only scan, chroma scans absent) — decoding it
-    # would return all-zero chroma planes with no error (ADVICE r14).
-    # Since round 16 the decoder ACCEPTS legal multi-scan baseline
-    # streams, so the incomplete sequence is structural invalidity
-    # (ValueError), no longer an unsupported-feature seam.
-    rgb3 = mm._jpeg_encode(8, 8, 3, bytes([10, 200, 60] * 64))
-    sos_at = rgb3.index(b"\xff\xda")
-    multi = bytearray(rgb3)
-    multi[sos_at + 4] = 1  # ns: 3 -> 1 (luma-only first scan)
-    with _pt.raises(ValueError, match="cover each frame component"):
-        mm._jpeg_decode(bytes(multi))
-    # SOS naming a component id absent from SOF: ValueError, not a bare
-    # StopIteration escaping mapInPandas as RuntimeError (PEP 479)
-    badcs = bytearray(base)
-    badcs[badcs.index(b"\xff\xda") + 5] = 9  # cs: 1 -> 9
-    with _pt.raises(ValueError, match="unknown component"):
-        mm._jpeg_decode(bytes(badcs))
-    # exotic factors stay behind the seam: mixed luma factors (2x4 —
-    # 4:1:1's 4x1 DECODES since round 16), and subsampled CHROMA
-    # (non-1:1 second component)
-    rgb420 = mm._jpeg_encode(16, 16, 3, bytes([90, 90, 90] * 256), subsample="420")
-    sof420 = rgb420.index(b"\xff\xc0")
-    h24 = bytearray(rgb420)
-    h24[sof420 + 11] = 0x24  # luma 2x2 -> 2x4
-    with _pt.raises(NotImplementedError, match="subsampl"):
-        mm._jpeg_decode(bytes(h24))
-    hsubc = bytearray(rgb420)
-    hsubc[sof420 + 14] = 0x21  # Cb 1x1 -> 2x1
-    with _pt.raises(NotImplementedError, match="subsampl"):
-        mm._jpeg_decode(bytes(hsubc))
-    feat = mm.decode_real(base, "image")
-    assert len(feat) == 8
-    assert feat[0] == _pt.approx(130 / 255.0, abs=1e-9)
-    assert all(q == _pt.approx(130 / 255.0, abs=1e-9) for q in feat[4:])
-
-
-def test_jpeg_411_roundtrips():
-    """4:1:1 (luma 4×1, 32×8 MCUs) and its vertical mirror (1×4) — the
-    last common luma-led layout, open since round 16 (the MCU loop and
-    nearest upsample were already factor-general; this pins the
-    whitelist): (a) MCU-constant even-offset grays roundtrip EXACTLY
-    through ALL FOUR scan modes (interleaved, separate, progressive,
-    progressive_sa); (b) general content decodes identically across
-    scan modes; (c) mixed luma factors (2×4) stay behind the seam."""
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    for sub, mw, mh in (("411", 32, 8), ("411v", 8, 32)):
-        w, h = mw * 2, mh * 3
-        pix = bytes(
-            128 + 2 * ((5 + (x // mw) * 7 + (y // mh) * 13) % 60) - 60
-            for y in range(h)
-            for x in range(w)
-            for _c in range(3)
-        )
-        for mode in ("interleaved", "separate", "progressive",
-                     "progressive_sa"):
-            got = mm._jpeg_decode(
-                mm._jpeg_encode(w, h, 3, pix, subsample=sub, scans=mode)
-            )
-            assert got == (w, h, 3, pix), (sub, mode)
-
-    w, h = 36, 20  # not MCU multiples: edge-replicated padding
-    pix = bytes(
-        (x * 5 + y * 9 + c * 17) % 240
-        for y in range(h)
-        for x in range(w)
-        for c in range(3)
-    )
-    ref = mm._jpeg_decode(mm._jpeg_encode(w, h, 3, pix, subsample="411"))
-    for mode in ("separate", "progressive", "progressive_sa"):
-        assert mm._jpeg_decode(
-            mm._jpeg_encode(w, h, 3, pix, subsample="411", scans=mode)
-        ) == ref, mode
-
-
-def test_jpeg_progressive_roundtrips_and_boundaries():
-    """Progressive (SOF2) JPEG (round 16, part 2 — the dominant
-    real-world web layout): (a) spectral-selection AND successive-
-    approximation streams decode BIT-IDENTICALLY to the interleaved
-    baseline of the same source for every supported sampling layout and
-    for grayscale; (b) the equality holds on adversarial content that
-    exercises EOB runs, ZRL-in-refinement and dense correction bits
-    (smooth gradient, isolated spikes, hash noise, 1-px checkerboard);
-    (c) constant-gray MCUs roundtrip exactly through five-scan SA (the
-    q177 fixture's claim); (d) structural seams: an AC-only stream
-    (missing DC scan), a multi-component AC scan, and a bad spectral
-    band all raise."""
-    import pytest as _pt
-
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    w, h = 20, 18
-    pix = bytes(
-        (x * 7 + y * 13 + c * 29) % 240
-        for y in range(h)
-        for x in range(w)
-        for c in range(3)
-    )
-    for sub in ("444", "420", "422", "440"):
-        inter = mm._jpeg_decode(mm._jpeg_encode(w, h, 3, pix, subsample=sub))
-        for mode in ("progressive", "progressive_sa"):
-            got = mm._jpeg_decode(
-                mm._jpeg_encode(w, h, 3, pix, subsample=sub, scans=mode)
-            )
-            assert got == inter, (sub, mode)
-    pixg = bytes((x * 16 + y * 3) % 256 for y in range(16) for x in range(16))
-    ig = mm._jpeg_decode(mm._jpeg_encode(16, 16, 1, pixg))
-    for mode in ("progressive", "progressive_sa"):
-        assert mm._jpeg_decode(
-            mm._jpeg_encode(16, 16, 1, pixg, scans=mode)
-        ) == ig, mode
-
-    # adversarial content: EOB runs (smooth), ZRL (spikes), dense
-    # refinement (noise), max frequency (checker)
-    spikes = bytearray([128] * (48 * 48 * 3))
-    for i in range(0, len(spikes), 997):
-        spikes[i] = 255
-    cases = [
-        ("smooth", 64, 64, bytes(
-            min(255, x + y) for y in range(64) for x in range(64)
-            for _ in range(3))),
-        ("spikes", 48, 48, bytes(spikes)),
-        ("noise", 40, 40, bytes(
-            (((i * 2654435761) & 0xFFFFFFFF) >> 16) & 0xFF
-            for i in range(40 * 40 * 3))),
-        ("checker", 32, 32, bytes(
-            (255 if (x + y) % 2 else 0) for y in range(32)
-            for x in range(32) for _ in range(3))),
-    ]
-    for name, cw, chh, cpix in cases:
-        for mode in ("progressive", "progressive_sa"):
-            for sub in ("444", "420"):
-                got = mm._jpeg_decode(mm._jpeg_encode(
-                    cw, chh, 3, cpix, subsample=sub, scans=mode))
-                ref = mm._jpeg_decode(
-                    mm._jpeg_encode(cw, chh, 3, cpix, subsample=sub))
-                assert got == ref, (name, mode, sub)
-
-    # constant-gray exactness through five-scan successive approximation
-    w2, h2 = 32, 48
-    pixc = bytes(
-        128 + 2 * ((3 + (x // 16) * 7 + (y // 16) * 13) % 60) - 60
-        for y in range(h2)
-        for x in range(w2)
-        for _c in range(3)
-    )
-    for mode in ("progressive", "progressive_sa"):
-        for sub in ("444", "420"):
-            assert mm._jpeg_decode(mm._jpeg_encode(
-                w2, h2, 3, pixc, subsample=sub, scans=mode
-            )) == (w2, h2, 3, pixc), (mode, sub)
-
-    # seams: drop the DC scan from a spectral-selection stream -> the
-    # AC-only remainder must raise, not decode flat-gray planes
-    data = mm._jpeg_encode(16, 16, 3, bytes([90] * 768), scans="progressive")
-    sos = [i for i in range(len(data) - 1)
-           if data[i] == 0xFF and data[i + 1] == 0xDA]
-    assert len(sos) == 4  # DC + 3 AC scans
-    no_dc = data[: sos[0]] + data[sos[1] :]
-    with _pt.raises(ValueError, match="DC scan for"):
-        mm._jpeg_decode(no_dc)
-    # review r16: a refinement-only DC scan must NOT satisfy the gate —
-    # dropping the Ah=0 first pass from an SA stream while keeping the
-    # DC refinement would decode flat gray with no error
-    sa = mm._jpeg_encode(16, 16, 3, bytes([200] * 768), scans="progressive_sa")
-    sos_sa = [i for i in range(len(sa) - 1)
-              if sa[i] == 0xFF and sa[i + 1] == 0xDA]
-    with _pt.raises(ValueError, match="first-pass"):
-        mm._jpeg_decode(sa[: sos_sa[0]] + sa[sos_sa[1] :])
-    # multi-component AC scan: patch an AC SOS to ns=3 (header bytes
-    # exist in the stream? build one by hand with a legal length)
-    two_comp_ac = bytes(
-        [0xFF, 0xDA, 0x00, 0x0C, 3, 1, 0x01, 2, 0x01, 3, 0x01, 1, 63, 0]
-    )
-    hacked = data[: sos[1]] + two_comp_ac + data[sos[1] + 10 :]
-    with _pt.raises(ValueError, match="single-component"):
-        mm._jpeg_decode(hacked)
-    # bad spectral band: Ss > Se
-    bad_band = bytearray(data)
-    bad_band[sos[1] + 7] = 63  # Ss: 1 -> 63 while Se stays 63? set Se < Ss
-    bad_band[sos[1] + 8] = 1   # Se: 63 -> 1
-    with _pt.raises(ValueError, match="spectral band"):
-        mm._jpeg_decode(bytes(bad_band))
-
-    with _pt.raises(ValueError, match="scans must be"):
-        mm._jpeg_encode(8, 8, 3, bytes(192), scans="sequential")
-
-
-def test_jpeg_multiscan_roundtrips_and_boundaries():
-    """The non-interleaved (multi-scan) baseline leg (round 16, VERDICT
-    r15 #5): (a) a separate-scans stream decodes BIT-IDENTICALLY to the
-    interleaved stream of the same source for every supported sampling
-    layout, including non-MCU-multiple dims where the luma scan's raster
-    grid differs from the interleaved padding; (b) MCU-constant
-    even-offset grays roundtrip exactly (the q176 fixture's claim); (c)
-    a partially interleaved (2-of-3-component) scan and a scan sequence
-    coding a component twice stay behind their seams."""
-    import pytest as _pt
-
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    for sub in ("444", "420", "422", "440"):
-        w, h = 20, 18
-        pix = bytes(
-            (x * 7 + y * 13 + c * 29) % 240
-            for y in range(h)
-            for x in range(w)
-            for c in range(3)
-        )
-        sep = mm._jpeg_decode(
-            mm._jpeg_encode(w, h, 3, pix, subsample=sub, scans="separate")
-        )
-        inter = mm._jpeg_decode(mm._jpeg_encode(w, h, 3, pix, subsample=sub))
-        assert sep == inter, sub
-
-    # constant-gray MCUs: exact through three scans (q176's argument)
-    w, h = 32, 48
-    pix = bytes(
-        128 + 2 * ((3 + (x // 16) * 7 + (y // 16) * 13) % 60) - 60
-        for y in range(h)
-        for x in range(w)
-        for _c in range(3)
-    )
-    for sub in ("444", "420"):
-        got = mm._jpeg_decode(
-            mm._jpeg_encode(w, h, 3, pix, subsample=sub, scans="separate")
-        )
-        assert got == (w, h, 3, pix), sub
-
-    # legal 0xFF fill bytes before markers (B.1.1.2 — real encoders emit
-    # them; review r16: the first skip implementation misread a
-    # fill-prefixed SOS as a segment length and dropped legal streams)
-    pix2 = bytes(
-        (x * 7 + y * 13 + c * 29) % 240
-        for y in range(18)
-        for x in range(20)
-        for c in range(3)
-    )
-    data2 = mm._jpeg_encode(20, 18, 3, pix2, subsample="420", scans="separate")
-    want2 = mm._jpeg_decode(data2)
-    sos2 = [i for i in range(len(data2) - 1)
-            if data2[i] == 0xFF and data2[i + 1] == 0xDA]
-    filled = (
-        data2[: sos2[1]] + b"\xff\xff\xff" + data2[sos2[1] : sos2[2]]
-        + b"\xff" + data2[sos2[2] : -2] + b"\xff\xff" + data2[-2:]
-    )
-    assert mm._jpeg_decode(filled) == want2
-
-    # seam: a 2-of-3-component scan (legal but unseen in practice).
-    # Surgery on the separate-scans stream: replace scan 1's SOS with a
-    # 2-component header and drop scan 2's SOS so coverage stays exact —
-    # the parse phase must raise BEFORE touching entropy data.
-    data = mm._jpeg_encode(16, 16, 3, bytes([90] * 768), scans="separate")
-    sos = [i for i in range(len(data) - 1)
-           if data[i] == 0xFF and data[i + 1] == 0xDA]
-    assert len(sos) == 3
-    two_comp = bytes([0xFF, 0xDA, 0x00, 0x0A, 2, 1, 0x00, 2, 0x00, 0, 63, 0])
-    hacked = (
-        data[: sos[0]]
-        + two_comp
-        + data[sos[0] + 10 : sos[1]]  # scan 1 entropy (1-comp SOS is 10 B)
-        + data[sos[1] + 10 : sos[2]]  # scan 2 entropy, ITS SOS DROPPED
-        + data[sos[2] :]
-    )
-    with _pt.raises(NotImplementedError, match="partially interleaved"):
-        mm._jpeg_decode(hacked)
-
-    # seam: a component coded twice across scans (structural invalidity)
-    dup = (
-        data[: sos[2]]
-        + data[sos[0] : sos[1]]  # scan 1 (component 1) again
-        + data[sos[2] :]
-    )
-    with _pt.raises(ValueError, match="cover each frame component"):
-        mm._jpeg_decode(dup)
-
-    with _pt.raises(ValueError, match="separate scans require RGB"):
-        mm._jpeg_encode(8, 8, 1, bytes(64), scans="separate")
-    with _pt.raises(ValueError, match="interleaved"):
-        mm._jpeg_encode(8, 8, 3, bytes(192), scans="zigzag-first")
-
-
-def test_jpeg420_roundtrips():
-    """Round 15 (VERDICT r14 #5): the 4:2:0 leg. (a) MCU-constant
-    even-offset grays roundtrip EXACTLY (the q171 fixture's claim),
-    including dims that are not MCU multiples; (b) per-MCU constant
-    COLORS roundtrip within the quantization tolerance — this exercises
-    non-neutral chroma through the box-downsample + nearest-upsample
-    path; (c) full-image gradients stay within the same bound the 1:1
-    tests allow."""
-    import pytest as _pt
-
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    # (a) exact: 2x2-MCU gray checkerboard, then odd dims 20x12
-    pix = bytearray()
-    for y in range(32):
-        for x in range(32):
-            v = 130 if (x // 16 + y // 16) % 2 == 0 else 184
-            pix += bytes([v, v, v])
-    w2, h2, ch, out = mm._jpeg_decode(
-        mm._jpeg_encode(32, 32, 3, bytes(pix), subsample="420")
-    )
-    assert (w2, h2, ch) == (32, 32, 3) and out == bytes(pix)
-    odd = bytes([140, 140, 140] * (20 * 12))
-    w3, h3, ch3, out3 = mm._jpeg_decode(
-        mm._jpeg_encode(20, 12, 3, odd, subsample="420")
-    )
-    assert (w3, h3, ch3) == (20, 12, 3) and out3 == odd
-
-    # (b) colored MCUs: chroma is real (nonzero Cb/Cr), bounded error
-    cpix = bytearray()
-    colors = [(200, 80, 40), (40, 180, 220), (90, 200, 90), (230, 230, 30)]
-    for y in range(32):
-        for x in range(32):
-            cpix += bytes(colors[(x // 16) + 2 * (y // 16)])
-    _, _, _, cout = mm._jpeg_decode(
-        mm._jpeg_encode(32, 32, 3, bytes(cpix), subsample="420")
-    )
-    assert max(abs(a - b) for a, b in zip(cout, cpix)) <= 4
-
-    # (c) gradient tolerance (quant error + 2x2 chroma averaging)
-    gpix = bytes(
-        min(255, (x * 5 + y * 3 + c * 7) % 220)
-        for y in range(16)
-        for x in range(16)
-        for c in range(3)
-    )
-    _, _, _, gout = mm._jpeg_decode(
-        mm._jpeg_encode(16, 16, 3, gpix, subsample="420")
-    )
-    # chroma is 2x2-averaged: neighboring-pixel chroma deltas fold in
-    assert max(abs(a - b) for a, b in zip(gout, gpix)) <= 40
-    n = len(gpix)
-    mean_err = sum(abs(a - b) for a, b in zip(gout, gpix)) / n
-    assert mean_err <= 8, mean_err
-
-    # encoder seam: unknown subsample mode refused ("411" ENCODES since
-    # round 16); gray + subsampling is a contradiction
-    with _pt.raises(NotImplementedError, match="444, 420, 422, 440"):
-        mm._jpeg_encode(16, 16, 3, bytes(768), subsample="211")
-    with _pt.raises(ValueError, match="RGB"):
-        mm._jpeg_encode(16, 16, 1, bytes(256), subsample="420")
-
-
-@pytest.mark.parametrize(
-    "mode,mw,mh", [("422", 16, 8), ("440", 8, 16)]
-)
-def test_jpeg422_440_roundtrips(mode, mw, mh):
-    """Round 15: the remaining luma-led layouts (q174's legs) — MCU-
-    constant even-offset grays roundtrip EXACTLY incl. non-MCU-multiple
-    dims; colored MCUs within quant tolerance (real chroma through the
-    fh×fv box-downsample + nearest-upsample path)."""
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    W, H = mw * 2, mh  # two MCUs side by side
-    pix = bytearray()
-    for y in range(H):
-        for x in range(W):
-            v = 130 if x < mw else 184
-            pix += bytes([v, v, v])
-    w2, h2, ch, out = mm._jpeg_decode(
-        mm._jpeg_encode(W, H, 3, bytes(pix), subsample=mode)
-    )
-    assert (w2, h2, ch) == (W, H, 3) and out == bytes(pix)
-    odd = bytes([140, 140, 140] * (21 * 13))
-    w3, h3, _, oo = mm._jpeg_decode(
-        mm._jpeg_encode(21, 13, 3, odd, subsample=mode)
-    )
-    assert (w3, h3) == (21, 13) and oo == odd
-    cpix = bytes([200, 80, 40] * (mw * mh))
-    _, _, _, oc = mm._jpeg_decode(
-        mm._jpeg_encode(mw, mh, 3, cpix, subsample=mode)
-    )
-    assert max(abs(a - b) for a, b in zip(oc, cpix)) <= 4
-
-
-def test_apng_compositing_legs():
-    """Round 16: the full fcTL compositing model. (a) dispose_op=2
-    (previous) reverts the painted region to its pre-frame content, so
-    a later partial frame shows the restored canvas; (b) blend_op=1
-    (alpha-over) on RGBA: fa=255 replaces, fa=0 keeps, fa=128 over an
-    opaque background lands exactly on the documented integer rounding
-    (den = fa·255 + da·(255−fa); white over black at fa=128 → 128);
-    (c) dispose_op=2 on the FIRST frame is treated as background per
-    spec; (d) gray+alpha (ch=2) composites through the same path."""
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    w, h = 10, 8
-    base = bytes(10 for _ in range(w * h * 3))
-    patch = bytes(200 for _ in range(4 * 3 * 3))
-    tiny = bytes(99 for _ in range(2 * 2 * 3))
-    _, _, _, fr = mm._apng_decode(mm._apng_encode(
-        w, h, 3, [base, patch, tiny],
-        fctls=[(0, 0, w, h, 0, 0), (2, 1, 4, 3, 2, 0), (0, 0, 2, 2, 0, 0)],
-    ))
-    c1 = bytearray(base)  # frame 1: patch visible at (2,1)
-    for yy in range(3):
-        o = ((1 + yy) * w + 2) * 3
-        c1[o : o + 12] = bytes([200] * 12)
-    assert fr[1][2] == bytes(c1)
-    c2 = bytearray(base)  # frame 2: patch REVERTED, tiny painted at 0,0
-    for yy in range(2):
-        o = (yy * w) * 3
-        c2[o : o + 6] = bytes([99] * 6)
-    assert fr[2][2] == bytes(c2)
-
-    # (b) alpha-over on RGBA
-    w2, h2 = 4, 2
-    bg = bytes([0, 0, 0, 255] * (w2 * h2))
-    fg = bytes([255, 255, 255, 128] * (w2 * h2))
-    _, _, _, fr = mm._apng_decode(mm._apng_encode(
-        w2, h2, 4, [bg, fg],
-        fctls=[(0, 0, w2, h2, 0, 0), (0, 0, w2, h2, 0, 1)],
-    ))
-    assert fr[1][2][0:4] == bytes([128, 128, 128, 255])
-    fg2 = bytes([7, 8, 9, 255]) + bytes([1, 2, 3, 0]) + bytes(
-        [7, 8, 9, 255] * (w2 * h2 - 2)
-    )
-    _, _, _, fr = mm._apng_decode(mm._apng_encode(
-        w2, h2, 4, [bg, fg2],
-        fctls=[(0, 0, w2, h2, 0, 0), (0, 0, w2, h2, 0, 1)],
-    ))
-    assert fr[1][2][0:4] == bytes([7, 8, 9, 255])   # fa=255 replaces
-    assert fr[1][2][4:8] == bytes([0, 0, 0, 255])   # fa=0 keeps bg
-
-    # (c) first-frame dispose=2 -> background (no raise, region cleared)
-    nxt = bytes(55 for _ in range(2 * 2 * 3))
-    _, _, _, fr = mm._apng_decode(mm._apng_encode(
-        w, h, 3, [base, nxt],
-        fctls=[(0, 0, w, h, 2, 0), (1, 1, 2, 2, 0, 0)],
-    ))
-    want = bytearray(w * h * 3)  # cleared canvas after frame 0
-    for yy in range(2):
-        o = ((1 + yy) * w + 1) * 3
-        want[o : o + 6] = bytes([55] * 6)
-    assert fr[1][2] == bytes(want)
-
-    # (d) gray+alpha over
-    bg2 = bytes([40, 255] * 6)
-    fg3 = bytes([240, 128] * 6)
-    _, _, _, fr = mm._apng_decode(mm._apng_encode(
-        3, 2, 2, [bg2, fg3],
-        fctls=[(0, 0, 3, 2, 0, 0), (0, 0, 3, 2, 0, 1)],
-    ))
-    # den = 128*255 + 255*127 = 65025; out = (128*255*240 + 255*127*40)/den
-    expect = (128 * 255 * 240 + 255 * 127 * 40 + 65025 // 2) // 65025
-    assert fr[1][2][0:2] == bytes([expect, 255])
-
-
-def test_apng_codec_roundtrip_and_seams():
-    """Round 15 (VERDICT r14 #8, preferred shape): the APNG codec.
-    (a) full-frame encode→decode roundtrip is EXACT (PNG lossless),
-    delays preserved, held frames byte-identical; (b) a REGION frame
-    (fcTL offsets) composes onto the canvas, and dispose_op=1 clears its
-    region for the next frame; (c) out-of-range blend/dispose codes
-    raise ValueError, and blend_op=1 WITHOUT an alpha channel reduces
-    to source (implicit alpha 255 — the over/previous semantics proper
-    are pinned in test_apng_compositing_legs); a plain PNG raises
-    ValueError (no acTL); frame count must match acTL; (d) the still
-    decoder reads an APNG's default image (frame 0) — the spec's
-    fallback behavior."""
-    import struct
-    import zlib
-
-    import pytest as _pt
-
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    w, h, ch = 12, 9, 3
-    f0 = bytes(
-        (x * 11 + y * 23 + c * 71) % 256
-        for y in range(h) for x in range(w) for c in range(ch)
-    )
-    f2 = bytes(
-        (5 + x * 11 + y * 23 + c * 71) % 256
-        for y in range(h) for x in range(w) for c in range(ch)
-    )
-    apng = mm._apng_encode(w, h, ch, [f0, f0, f2], [(4, 100), (5, 100), (6, 100)])
-    w2, h2, ch2, frames = mm._apng_decode(apng)
-    assert (w2, h2, ch2) == (w, h, ch)
-    assert [f[:2] for f in frames] == [(4, 100), (5, 100), (6, 100)]
-    assert frames[0][2] == f0 and frames[1][2] == f0 and frames[2][2] == f2
-    # (d) still-decoder fallback: default image = frame 0
-    assert mm._png_decode(apng)[3] == f0
-    with _pt.raises(ValueError, match="acTL"):
-        mm._apng_decode(mm._png_encode(8, 8, 1, bytes(64)))
-
-    # (b) hand-build: frame 2 is a 4x3 region at (2, 1) over frame 1,
-    # dispose_op=1 on frame 2 so frame 3 sees the region cleared
-    region = bytes(range(4 * 3 * ch))
-    out = bytearray(mm._PNG_MAGIC)
-    out += mm._png_chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-    out += mm._png_chunk(b"acTL", struct.pack(">II", 3, 0))
-    out += mm._png_chunk(
-        b"fcTL", struct.pack(">IIIIIHHBB", 0, w, h, 0, 0, 4, 100, 0, 0)
-    )
-    out += mm._png_chunk(
-        b"IDAT", zlib.compress(mm._png_filter_scanlines(w, h, ch, f0))
-    )
-    out += mm._png_chunk(
-        b"fcTL", struct.pack(">IIIIIHHBB", 1, 4, 3, 2, 1, 4, 100, 1, 0)
-    )
-    out += mm._png_chunk(
-        b"fdAT",
-        struct.pack(">I", 2)
-        + zlib.compress(mm._png_filter_scanlines(4, 3, ch, region)),
-    )
-    out += mm._png_chunk(
-        b"fcTL", struct.pack(">IIIIIHHBB", 3, 1, 1, 0, 0, 4, 100, 0, 0)
-    )
-    out += mm._png_chunk(
-        b"fdAT",
-        struct.pack(">I", 4)
-        + zlib.compress(mm._png_filter_scanlines(1, 1, ch, f0[:3])),
-    )
-    out += mm._png_chunk(b"IEND", b"")
-    _, _, _, fr3 = mm._apng_decode(bytes(out))
-    # frame 2: region pasted over f0
-    want = bytearray(f0)
-    for yy in range(3):
-        dst = ((1 + yy) * w + 2) * ch
-        want[dst : dst + 4 * ch] = region[yy * 4 * ch : (yy + 1) * 4 * ch]
-    assert fr3[1][2] == bytes(want)
-    # frame 3: region cleared (dispose 1), then 1x1 repaint at origin
-    want3 = bytearray(f0)
-    for yy in range(3):
-        dst = ((1 + yy) * w + 2) * ch
-        want3[dst : dst + 4 * ch] = bytes(4 * ch)
-    want3[0:3] = f0[:3]
-    assert fr3[2][2] == bytes(want3)
-
-    # (c) compositing-code boundaries: since round 16 blend 1 and
-    # dispose 2 DECODE; out-of-range codes raise, and alpha-less
-    # blend-over reduces to source
-    bad_blend = bytearray(out)
-    # patch the SECOND fcTL's blend byte (last byte of its 26-byte body)
-    idx = bad_blend.index(b"fcTL", bad_blend.index(b"fcTL") + 4)
-    body = bytes(
-        bad_blend[idx + 4 : idx + 4 + 25]
-    ) + bytes([1])  # blend 0 -> 1 (legal; no alpha channel here)
-    fixed = (
-        bytes(bad_blend[: idx - 4])
-        + mm._png_chunk(b"fcTL", body)
-        + bytes(bad_blend[idx + 4 + 26 + 4 :])
-    )
-    assert [f[2] for f in mm._apng_decode(fixed)[3]] == [
-        f[2] for f in mm._apng_decode(out)[3]
-    ]  # alpha-less over == source
-    body_bad = bytes(bad_blend[idx + 4 : idx + 4 + 25]) + bytes([9])
-    fixed_bad = (
-        bytes(bad_blend[: idx - 4])
-        + mm._png_chunk(b"fcTL", body_bad)
-        + bytes(bad_blend[idx + 4 + 26 + 4 :])
-    )
-    with _pt.raises(ValueError, match="blend_op"):
-        mm._apng_decode(fixed_bad)
-    bad_disp = bytearray(out)
-    idx = bad_disp.index(b"fcTL", bad_disp.index(b"fcTL") + 4)
-    body = bytearray(bad_disp[idx + 4 : idx + 4 + 26])
-    body[24] = 3  # out-of-range dispose
-    fixed2 = (
-        bytes(bad_disp[: idx - 4])
-        + mm._png_chunk(b"fcTL", bytes(body))
-        + bytes(bad_disp[idx + 4 + 26 + 4 :])
-    )
-    with _pt.raises(ValueError, match="dispose_op"):
-        mm._apng_decode(fixed2)
-    # acTL/frame-count mismatch
-    trunc = bytearray(mm._apng_encode(w, h, ch, [f0, f2]))
-    actl_at = trunc.index(b"acTL")
-    body = struct.pack(">II", 5, 0)
-    fixed3 = (
-        bytes(trunc[: actl_at - 4])
-        + mm._png_chunk(b"acTL", body)
-        + bytes(trunc[actl_at + 4 + 8 + 4 :])
-    )
-    with _pt.raises(ValueError, match="declares"):
-        mm._apng_decode(fixed3)
-
-
-def test_video_operators_rgba_alpha_over(spark):
-    """Round 16: an RGBA APNG whose second frame alpha-overs the first
-    flows through BOTH video operators — frame stats report the
-    composited (blended) channel sums with channels=4 (alpha excluded
-    from the per-channel sums by the min(ch,3) rule), and the per-frame
-    dHash sees the blended pixels (both frames distinct here)."""
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    w, h = 12, 9
-    f0 = bytes(
-        (x * 11 + y * 23 + c * 71) % 256
-        for y in range(h) for x in range(w) for c in range(4)
-    )
-    f1 = bytes([255, 255, 255, 128] * (w * h))
-    apng = mm._apng_encode(
-        w, h, 4, [f0, f1],
-        fctls=[(0, 0, w, h, 0, 0), (0, 0, w, h, 0, 1)],
-    )
-    media = spark.createDataFrame(
-        [(0, "video", apng, w, h, 80, "apng")], schema=mm.MEDIA_SCHEMA
-    )
-    stats = sorted(
-        mm.video_frame_stats(media).collect(), key=lambda r: r["frame_idx"]
-    )
-    assert len(stats) == 2 and stats[0]["channels"] == 4
-    # frame 1 is f1 alpha-overed onto f0 — recompute the blend exactly
-    _, _, _, frames = mm._apng_decode(apng)
-    import numpy as np
-
-    arr = np.frombuffer(frames[1][2], dtype=np.uint8).reshape(-1, 4)
-    for c in range(3):
-        assert stats[1][f"sum_c{c}"] == int(
-            arr[:, c].astype(np.int64).sum()
-        )
-    hashes = mm.video_scene_changes(media).collect()
-    assert len(hashes) == 2
-    assert hashes[0]["dhash"] != hashes[1]["dhash"]
-
-
-def test_video_operators_edge_cases(spark):
-    """video_frame_stats / video_scene_changes: non-video rows, NULL
-    payloads, and undecodable bytes contribute zero rows; a video
-    smaller than the 9x8 dHash grid yields stats but no scene rows;
-    planted held frames flag scene_change exactly on pattern changes."""
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    tiny = mm._apng_encode(
-        4, 4, 3, [bytes(48), bytes(48)], [(4, 100), (4, 100)]
-    )
-    good = mm._apng_encode(
-        12, 9, 3,
-        [bytes([10] * 324), bytes([10] * 324),
-         bytes((x * 13 + y * 29 + c) % 256 for y in range(9) for x in range(12) for c in range(3))],
-        [(4, 100), (5, 100), (25, 1000)],
-    )
-    media = spark.createDataFrame(
-        [
-            (0, "video", good, 12, 9, 115, "apng"),
-            (1, "video", tiny, 4, 4, 80, "apng"),
-            (2, "image", good, 12, 9, None, "apng"),  # wrong kind
-            (3, "video", None, None, None, None, "apng"),
-            (4, "video", b"garbage", None, None, None, "apng"),
-        ],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    stats = mm.video_frame_stats(media).collect()
-    by_media = {}
-    for r in stats:
-        by_media.setdefault(r["media_id"], []).append(r)
-    assert set(by_media) == {0, 1}
-    assert [r["t_ms"] for r in sorted(by_media[0], key=lambda r: r["frame_idx"])] == [0, 40, 90]
-    assert by_media[0][0]["sum_c0"] == 10 * 108
-    scenes = mm.video_scene_changes(media).collect()
-    assert {r["media_id"] for r in scenes} == {0}  # tiny video: no rows
-    flags = [r["scene_change"] for r in sorted(scenes, key=lambda r: r["frame_idx"])]
-    assert flags == [True, False, True]
-
-
-def test_video_dedup_planted_clusters(spark):
-    """q175's planted semantics: every within-cluster video pair shares
-    AT LEAST its two even frames' fingerprints (n_shared >= 2); all 24
-    within-cluster pairs are present; pair ids are ordered a < b."""
-    from syntenybrowserv2_etl_spark import queries as q
-
-    got = {
-        (r["media_id_a"], r["media_id_b"]): r["n_shared"]
-        for r in q.REGISTRY["q175_video_dedup"]
-        .spark_fn(spark, "/root/testdata/sf0.001")
-        .collect()
-    }
-    for c in range(8):
-        ids = [c * 3 + k for k in range(3)]
-        for i in range(3):
-            for j in range(i + 1, 3):
-                assert got[(ids[i], ids[j])] >= 2, (ids[i], ids[j])
-    assert all(a < b for a, b in got)
-
-
-def _band_hash_row(i, b0, b1, b2, b3):
-    h = (b3 << 48) | (b2 << 32) | (b1 << 16) | b0
-    if h >= 1 << 63:
-        h -= 1 << 64
-    return (i, h, b0, b1, b2, b3)
-
-
-def test_hamming_band_pairs_occupancy_guard(spark):
-    """The band-occupancy guard (round 16, VERDICT r15 #2): a planted
-    hot-bucket population — 10 rows sharing the SAME band-0 and band-1
-    values but pairwise Hamming 4 — generates 66 useless candidates
-    uncapped; with max_bucket=6 those buckets are skipped, the cool-bucket
-    true pair survives, and the hot-only true pair (every matching band
-    over cap) is the documented recall loss. band_occupancy_report
-    hand-checks the per-band bucket counts and the skipped pair mass."""
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    rows = []
-    # hot population: bands 0/1 identical across all 10, bands 2/3 are
-    # disjoint single bits -> pairwise Hamming 4 (never true pairs)
-    for i in range(10):
-        rows.append(_band_hash_row(i, 0xAAAA, 0xBBBB, 1 << i, 1 << (15 - i)))
-    # cool true pair: shares three cool buckets, Hamming 1
-    rows.append(_band_hash_row(100, 0x1111, 0x2222, 0x3333, 0x4444))
-    rows.append(_band_hash_row(101, 0x1111, 0x2222, 0x3333, 0x4445))
-    # hot-only true pair: Hamming 2, but its ONLY matching bands (0 and 1)
-    # are the hot buckets
-    rows.append(_band_hash_row(200, 0xAAAA, 0xBBBB, 0x5555, 0x6666))
-    rows.append(_band_hash_row(201, 0xAAAA, 0xBBBB, 0x5554, 0x6667))
-    hashes = spark.createDataFrame(
-        rows, "media_id long, hsh long, b0 long, b1 long, b2 long, b3 long"
-    )
-
-    uncapped = {
-        (r["media_id_a"], r["media_id_b"]): r["hamming"]
-        for r in mm.hamming_band_pairs(hashes, "media_id", "hsh").collect()
-    }
-    assert uncapped == {(100, 101): 1, (200, 201): 2}
-    # 12 rows share the band-0 bucket AND the band-1 bucket -> 66 distinct
-    # candidate pairs, plus the cool pair
-    assert mm.band_candidates(hashes, "media_id", "hsh").count() == 67
-
-    capped_cands = mm.band_candidates(
-        hashes, "media_id", "hsh", max_bucket=6
-    )
-    assert capped_cands.count() == 1
-    capped = {
-        (r["media_id_a"], r["media_id_b"]): r["hamming"]
-        for r in mm.hamming_band_pairs(
-            hashes, "media_id", "hsh", max_bucket=6
-        ).collect()
-    }
-    assert capped == {(100, 101): 1}  # hot-only pair is the recall trade
-
-    rep = {
-        r["band"]: r
-        for r in mm.band_occupancy_report(
-            hashes, "media_id", "hsh", max_bucket=6
-        ).collect()
-    }
-    assert set(rep) == {0, 1, 2, 3}
-    for band in (0, 1):
-        r = rep[band]
-        assert r["n_buckets"] == 2
-        assert r["max_occupancy"] == 12
-        assert r["candidate_pairs"] == 66 + 1
-        assert r["over_cap_pairs"] == 66
-        assert r["over_cap_buckets"] == 1
-    assert rep[2]["n_buckets"] == 13
-    assert rep[2]["max_occupancy"] == 2
-    assert rep[2]["candidate_pairs"] == 1
-    assert rep[2]["over_cap_pairs"] == 0
-    assert rep[3]["n_buckets"] == 14
-    assert rep[3]["max_occupancy"] == 1
-    assert rep[3]["candidate_pairs"] == 0
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        mm.band_candidates(hashes, "media_id", "hsh", max_bucket=0)
-
-
-def test_dhash_bands_matches_kernel_convention(spark):
-    """dhash_bands re-derives b0..b3 from the packed signed hash; it
-    must agree bit-for-bit with the bands the hash kernel emits inline
-    (image_dhash) — including hashes whose top band sets the sign bit."""
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    media = mm.synthetic_neardup_png_media(spark, 6, 3)
-    hs = mm.image_dhash(media)
-    rederived = mm.dhash_bands(
-        hs.select("media_id", "dhash"), "dhash"
-    )
-    want = {
-        r["media_id"]: (r["b0"], r["b1"], r["b2"], r["b3"])
-        for r in hs.collect()
-    }
-    got = {
-        r["media_id"]: (r["b0"], r["b1"], r["b2"], r["b3"])
-        for r in rederived.collect()
-    }
-    assert got == want
-    # at least one fixture hash is negative (sign bit set) or the
-    # top-band extraction under arithmetic shiftright went untested
-    assert any(r["dhash"] < 0 for r in hs.collect())
-    # frames that already carry inline bands are refused (re-deriving
-    # would shadow them with ambiguous duplicates — review r17)
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        mm.dhash_bands(hs, "dhash")
-
-
-def test_video_neardup_hamming_pairs(spark):
-    """video_neardup_hamming_pairs (q178's operator): banded join ≡
-    brute-force all-pairs Hamming over the per-frame hashes (pigeonhole
-    completeness on a fixture with real near-misses — the q175 fixture
-    carries Hamming-1 and Hamming-2 cross-video frame pairs beyond its
-    exact collisions); n_near ≥ q175's exact n_shared pairwise with
-    strictly more total mass; radius > 2 is refused; the occupancy
-    guard forwards."""
-    import itertools
-
-    import pytest as _pytest
-
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    media = mm.synthetic_neardup_apng_media(spark, 8, 3)
-    got = {
-        (r["media_id_a"], r["media_id_b"]): r["n_near"]
-        for r in mm.video_neardup_hamming_pairs(media).collect()
-    }
-
-    # brute-force oracle from the same decoded hashes, driver-side
-    hs = {}
-    for r in mm.video_scene_changes(media).select("media_id", "dhash").collect():
-        hs.setdefault(r["media_id"], set()).add(r["dhash"])
-    want = {}
-    for a, b in itertools.combinations(sorted(hs), 2):
-        n = sum(
-            1
-            for ha in hs[a]
-            for hb in hs[b]
-            if bin((ha ^ hb) & ((1 << 64) - 1)).count("1") <= 2
-        )
-        if n:
-            want[(a, b)] = n
-    assert got == want
-    # the tolerant radius finds strictly more than exact fingerprinting
-    exact = {
-        (a, b): len(hs[a] & hs[b])
-        for a, b in itertools.combinations(sorted(hs), 2)
-        if hs[a] & hs[b]
-    }
-    assert all(got[k] >= v for k, v in exact.items())
-    assert sum(got.values()) > sum(exact.values())
-
-    with _pytest.raises(ValueError):
-        mm.video_neardup_hamming_pairs(media, max_hamming=3)
-    # a generous cap changes nothing; the knob reaches band_candidates
-    capped = {
-        (r["media_id_a"], r["media_id_b"]): r["n_near"]
-        for r in mm.video_neardup_hamming_pairs(
-            media, max_bucket=10_000
-        ).collect()
-    }
-    assert capped == got
-
-
-def test_image_dhash_brightness_invariant_and_boundaries(spark):
-    """image_dhash (q169's primitive): uniform brightness shifts hash
-    identically (the cross-multiplied gradient bits cancel the shift
-    exactly); genuinely different patterns hash differently; sub-grid
-    images and undecodable payloads contribute zero rows; bands always
-    reassemble the hash; the JPEG decode path feeds the same hash."""
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    media = mm.synthetic_neardup_png_media(spark, 4, 3)
-    rows = {r["media_id"]: r for r in mm.image_dhash(media).collect()}
-    assert set(rows) == set(range(12))
-    for base in range(4):
-        assert (
-            rows[base]["dhash"]
-            == rows[4 + base]["dhash"]
-            == rows[8 + base]["dhash"]
-        )
-    assert len({rows[b]["dhash"] for b in range(4)}) == 4
-    for r in rows.values():
-        uh = r["dhash"] + (1 << 64) if r["dhash"] < 0 else r["dhash"]
-        assert all(((uh >> (16 * j)) & 0xFFFF) == r[f"b{j}"] for j in range(4))
-
-    # 8x8 (below the 9-wide grid) and junk payloads: zero rows
-    small_png = mm._png_encode(8, 8, 1, bytes(range(64)))
-    edge = spark.createDataFrame(
-        [(0, "image", small_png, 8, 8, None, "png"),
-         (1, "image", b"junk", None, None, None, "png")],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    assert mm.image_dhash(edge).count() == 0
-
-    # a (lossless-by-construction) JPEG of a gradient hashes through the
-    # JPEG decode leg — same magic-dispatch pipeline
-    w, h = 16, 16
-    pix = bytes((x * 16) % 256 for y in range(h) for x in range(w))
-    jpg = mm._jpeg_encode(w, h, 1, pix)
-    jm = spark.createDataFrame(
-        [(7, "image", jpg, w, h, None, "jpeg")], schema=mm.MEDIA_SCHEMA
-    )
-    out = mm.image_dhash(jm).collect()
-    assert len(out) == 1 and out[0]["media_id"] == 7
-    # a monotone left-to-right ramp: every gradient bit set
-    uh = out[0]["dhash"] + (1 << 64) if out[0]["dhash"] < 0 else out[0]["dhash"]
-    assert uh == (1 << 64) - 1
-
-
-def test_wav_sample_format_legs():
-    """Round 16: the WAV decoder's three new sample formats — unsigned
-    PCM8, signed PCM24, IEEE float32 — each normalized into the int16
-    domain. (a) int16 samples that are multiples of 256 roundtrip
-    EXACTLY through all four containers; (b) general int16 samples stay
-    exact through pcm16/pcm24/float32 while pcm8 quantizes to the high
-    byte as documented; (c) the SAME waveform in different containers
-    yields the SAME decode_real feature vector; (d) 32-bit integer PCM
-    stays behind the seam."""
-    import struct
-
-    import pytest as _pt
-
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    samples = [(((i * 37) % 256) - 128) * 256 for i in range(200)]
-    feats = set()
-    for fmt in ("pcm16", "pcm8", "pcm24", "float32"):
-        data = mm._wav_encode(1, 8000, samples, fmt)
-        n_ch, rate, got = mm._wav_decode(data)
-        assert (n_ch, rate, got) == (1, 8000, samples), fmt
-        feats.add(tuple(mm.decode_real(data, "audio")))
-    assert len(feats) == 1  # container-independent features
-
-    s2 = [((i * 123) % 4001) - 2000 for i in range(150)]
-    for fmt in ("pcm16", "pcm24", "float32"):
-        assert mm._wav_decode(mm._wav_encode(1, 8000, s2, fmt))[2] == s2
-    assert mm._wav_decode(mm._wav_encode(1, 8000, s2, "pcm8"))[2] == [
-        (s >> 8) << 8 for s in s2
-    ]
-
-    # seam: 32-bit integer PCM (fmt 1, bits 32)
-    hdr = struct.pack("<HHIIHH", 1, 1, 8000, 8000 * 4, 4, 32)
-    body = struct.pack("<10i", *range(10))
-    bad = (
-        b"RIFF" + (4 + 8 + len(hdr) + 8 + len(body)).to_bytes(4, "little")
-        + b"WAVE" + b"fmt " + len(hdr).to_bytes(4, "little") + hdr
-        + b"data" + len(body).to_bytes(4, "little") + body
-    )
-    with _pt.raises(NotImplementedError, match="WAV"):
-        mm._wav_decode(bad)
-    with _pt.raises(ValueError, match="WAV fixture format"):
-        mm._wav_encode(1, 8000, s2, "alaw")
-
-    # review r16: inf/-inf clamp, NaN -> 0 — round(inf) would raise
-    # OverflowError, escaping the callers' quarantine and failing the
-    # whole Arrow task on one corrupt row
-    data = bytearray(mm._wav_encode(1, 8000, [1000] * 8, "float32"))
-    off = bytes(data).index(b"data") + 8
-    data[off : off + 4] = struct.pack("<f", float("inf"))
-    data[off + 4 : off + 8] = struct.pack("<f", float("-inf"))
-    data[off + 8 : off + 12] = struct.pack("<f", float("nan"))
-    assert mm._wav_decode(bytes(data))[2][:3] == [32767, -32768, 0]
-
-
-def test_audio_envelope_hash_gain_invariant_and_boundaries(spark):
-    """audio_envelope_hash (q170's primitive): exact integer gain levels
-    hash identically (energies scale by gain², cancelling in the
-    cross-multiplied compare); distinct frequencies hash differently;
-    sub-segment-count streams and junk payloads contribute zero rows;
-    bands reassemble the hash."""
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    media = mm.synthetic_neardup_wav_media(spark, 4, 3)
-    rows = {r["media_id"]: r for r in mm.audio_envelope_hash(media).collect()}
-    assert set(rows) == set(range(12))
-    for base in range(4):
-        assert (
-            rows[base]["ahash"]
-            == rows[4 + base]["ahash"]
-            == rows[8 + base]["ahash"]
-        )
-    assert len({rows[b]["ahash"] for b in range(4)}) == 4
-    for r in rows.values():
-        uh = r["ahash"] + (1 << 64) if r["ahash"] < 0 else r["ahash"]
-        assert all(((uh >> (16 * j)) & 0xFFFF) == r[f"b{j}"] for j in range(4))
-
-    import struct
-
-    short_pcm = struct.pack("<10h", *range(10))  # 10 samples < 65 segments
-    fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-    wav = (
-        b"RIFF" + struct.pack("<I", 28 + len(short_pcm)) + b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"data" + struct.pack("<I", len(short_pcm)) + short_pcm
-    )
-    edge = spark.createDataFrame(
-        [(0, "audio", wav, None, None, 1, "pcm"),
-         (1, "audio", b"RIFFjunk", None, None, None, "pcm"),
-         (2, "image", b"not audio", None, None, None, "png")],
-        schema=mm.MEDIA_SCHEMA,
-    )
-    assert mm.audio_envelope_hash(edge).count() == 0
-
-
 def test_bm25_rank_empty_query_terms_rejected(spark):
     import pytest as _pt
 
@@ -2586,27 +1275,6 @@ def test_bm25_rank_empty_query_terms_rejected(spark):
     docs = spark.createDataFrame([(1, "a b c")], ["doc_id", "text"])
     with _pt.raises(ValueError, match="non-empty"):
         txt.bm25_rank(docs, "doc_id", "text", [])
-
-
-def test_wav_decode_odd_length_data_chunk_drops_final_byte():
-    """A data chunk whose declared length overruns the buffer by an odd
-    byte count decodes the whole samples (struct.error would escape the
-    ValueError seam and kill the mapInPandas task)."""
-    wav = _make_wav([100, 200, 300])
-    truncated = wav[:-1]  # 5 pcm bytes remain under a 6-byte declared len
-    n_ch, rate, samples = multimodal._wav_decode(truncated)
-    assert samples == [100, 200]
-
-
-def test_png_gray_alpha_luminance_excludes_alpha():
-    """Gray+alpha (ctype 4): quadrant luminance uses the gray channel
-    only, consistent with RGBA where alpha is excluded — an opaque
-    mid-gray image reads ~0.5, not (gray+alpha)/2."""
-    rows = [bytes([128, 255] * 2), bytes([128, 255] * 2)]
-    f = multimodal.decode_real(_make_png(2, 2, rows, ctype=4), "image")
-    assert f[0] == 128 / 255.0  # channel-0 mean: gray
-    assert f[1] == 1.0  # channel-1 mean: alpha
-    assert f[4:] == [128 / 255.0] * 4  # luminance excludes alpha
 
 
 def test_tfidf_top_terms_hand_corpus(spark):
@@ -3187,61 +1855,6 @@ def test_keep_best_representative_hand_corpus(spark):
     assert set(got) == {2, 4}
     assert got[2][0] == 3 and got[4][0] == 1
     assert got[2][1] > got[4][1] == 9
-
-
-def test_audio_frame_features_exact_values(spark):
-    """Per-frame RMS / peak / zero-crossings over a REAL WAV decode must be
-    exact: an alternating-sign square wave has a known crossing count and
-    constant RMS; a stereo payload downmixes to the channel mean before
-    framing; non-audio and undecodable rows contribute zero frames."""
-    # mono: 10 alternating +1000/-1000 samples, frame size 4 -> frames of
-    # 4, 4, 2 samples
-    mono = [1000 if i % 2 == 0 else -1000 for i in range(10)]
-    # stereo: L=2000, R=0 constant -> mono mean 1000, no crossings
-    stereo = [2000, 0] * 6
-    media = spark.createDataFrame(
-        [
-            (1, "audio", _make_wav(mono), None, None, 2, "pcm"),
-            (2, "audio", _make_wav(stereo, n_ch=2), None, None, 2, "pcm"),
-            (3, "image", b"not audio", None, None, None, "png"),
-            (4, "audio", None, None, None, None, "pcm"),
-            (5, "audio", b"garbage-bytes", None, None, None, "pcm"),
-        ],
-        multimodal.MEDIA_SCHEMA,
-    )
-    rows = {
-        (r["media_id"], r["frame_idx"]): r
-        for r in multimodal.audio_frame_features(media, frame_samples=4).collect()
-    }
-    assert {k[0] for k in rows} == {1, 2}
-    # media 1: frames (4, 4, 2) samples; rms = 1000/32768 everywhere;
-    # crossings = transitions within the frame (3, 3, 1)
-    assert [rows[(1, i)]["n_samples"] for i in range(3)] == [4, 4, 2]
-    for i, zc in [(0, 3), (1, 3), (2, 1)]:
-        r = rows[(1, i)]
-        assert r["zero_crossings"] == zc
-        assert r["rms"] == 1000.0 / 32768.0
-        assert r["peak"] == 1000.0 / 32768.0
-        assert r["start_sample"] == i * 4
-    # media 2: 6 mono samples after downmix -> frames (4, 2); constant
-    # +1000 -> zero crossings nowhere
-    assert [rows[(2, i)]["n_samples"] for i in range(2)] == [4, 2]
-    assert all(rows[(2, i)]["zero_crossings"] == 0 for i in range(2))
-    assert all(rows[(2, i)]["rms"] == 1000.0 / 32768.0 for i in range(2))
-
-
-def test_synthetic_wav_media_roundtrips_through_decoder(spark):
-    """The closed-form WAV fixture must decode back to its formula samples
-    byte-exactly — the premise that lets q97 value-check the real decode
-    path against SQL arithmetic."""
-    media = multimodal.synthetic_wav_media(spark, 5)
-    for r in media.collect():
-        n_ch, rate, samples = multimodal._wav_decode(bytes(r["payload"]))
-        i = r["media_id"]
-        want = [
-            ((i * 37 + j * 11) % 2048) - 1024 for j in range(200 + i % 7)
-        ]
-        assert (n_ch, rate) == (1, 8000) and samples == want
 
 
 # --- round 8: graph cohesion, time-series shaping, profiling, layout ---
@@ -4993,63 +3606,6 @@ def test_corpus_diversity_exact(spark):
     h_a = round(-(0.5 * math.log(0.5) + 2 * 0.25 * math.log(0.25)), 6)
     assert got["a"] == (4, 3, 0.75, h_a)
     assert got["b"] == (4, 1, 0.25, 0.0)  # empty doc contributes nothing
-
-
-def test_png_encode_decode_roundtrip_all_filters():
-    """The fixture writer (_png_encode, per-row filter y % 5) round-trips
-    bit-exactly through _png_decode for RGB and grayscale, across heights
-    that exercise every filter type — so the q143 closed-form oracle is
-    checking the REAL inflate + un-filter path, not a fixture tautology."""
-    for ch in (1, 3):
-        for w, h in [(1, 1), (3, 7), (10, 6), (7, 11)]:
-            pix = bytes(
-                (x * 11 + y * 23 + c * 71 + w) % 256
-                for y in range(h)
-                for x in range(w)
-                for c in range(ch)
-            )
-            got = multimodal._png_decode(multimodal._png_encode(w, h, ch, pix))
-            assert got == (w, h, ch, pix)
-
-
-def test_image_stats_real_decode_and_codec_boundary(spark):
-    """image_stats through the real PNG path: closed-form sums for one
-    image pinned by hand; undecodable/non-image payloads contribute zero
-    rows (the codec boundary still raises inside decode_real itself)."""
-    import pytest
-
-    media = multimodal.synthetic_png_media(spark, 6)
-    got = {r["media_id"]: r for r in multimodal.image_stats(media).collect()}
-    assert set(got) == set(range(6))
-    i = 2  # w=8, h=6
-    w, h = 8, 6
-    exp_c = [
-        sum((i * 37 + x * 11 + y * 23 + c * 71) % 256
-            for x in range(w) for y in range(h))
-        for c in range(3)
-    ]
-    r = got[i]
-    assert (r["width"], r["height"], r["channels"]) == (w, h, 3)
-    assert [r["sum_c0"], r["sum_c1"], r["sum_c2"]] == exp_c
-    # quadrant sums cover every pixel exactly once
-    assert (
-        r["lum_q0"] + r["lum_q1"] + r["lum_q2"] + r["lum_q3"] == sum(exp_c)
-    )
-    # garbage / non-image rows: zero output rows, no crash
-    junk = spark.createDataFrame(
-        [(99, "image", b"not a png", None, None, None, "png"),
-         (100, "audio", b"RIFF", None, None, None, "pcm")],
-        schema=multimodal.MEDIA_SCHEMA,
-    )
-    assert multimodal.image_stats(junk).count() == 0
-    # a JPEG magic with a garbage body is now a DECODE error — the real
-    # baseline decoder landed in round 14, so the codec boundary moved to
-    # progressive/subsampled variants (test_jpeg_codec_boundaries);
-    # unknown containers still raise NotImplementedError
-    with pytest.raises(ValueError):
-        multimodal.decode_real(b"\xff\xd8\xff\xe0JFIF-ish", "image")
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_real(b"\x00unknown-container-magic", "image")
 
 
 def test_categorical_association_hand_computed(spark):

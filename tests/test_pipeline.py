@@ -388,3 +388,33 @@ def test_compact_table_reduces_files_preserves_rows(spark, tmp_path):
     ranges.sort()
     assert all(ranges[i][1] < ranges[i + 1][0] for i in range(len(ranges) - 1))
     assert not _glob.glob(path + "__*")  # staging/old cleaned up
+
+
+def test_compact_table_keeps_database_layout(spark, tmp_path):
+    """Compacting a taxon-partitioned ``write_table`` output keeps its
+    ``gene_taxonid=`` directories and its zstd files: the rewrite goes
+    through ``write_table`` with the partition columns read off the
+    table's directories."""
+    import os
+
+    from syntenybrowserv2_etl_spark.sources import io
+
+    path = str(tmp_path / "gene")
+    df = spark.range(20_000).selectExpr(
+        "concat('MGI:', id) as gene_id",
+        "id * 7 as gene_start_pos",
+        "if(id % 2 = 0, 10090, 9606) as gene_taxonid",
+    )
+    io.write_table(df.repartition(12), path, partition_by=["gene_taxonid"])
+    before = {tuple(r) for r in spark.read.parquet(path).collect()}
+    n_before, n_after = io.compact_table(spark, path, target_mb=1)
+    assert n_before == 24 and n_after < n_before
+    assert {tuple(r) for r in spark.read.parquet(path).collect()} == before
+    assert sorted(d for d in os.listdir(path) if d[0] not in "_.") == [
+        "gene_taxonid=10090",
+        "gene_taxonid=9606",
+    ]
+    files = _parquet_files(path)
+    assert all(os.path.basename(os.path.dirname(f)).startswith("gene_taxonid=")
+               for f in files)
+    _assert_zstd(files)

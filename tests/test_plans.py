@@ -81,18 +81,6 @@ def test_hot_paths_codegen(spark):
         assert "ArrowEvalPython" not in p, name
 
 
-def test_multimodal_is_arrow_batched(spark):
-    # the one deliberately-Python operator must be Arrow-batched mapInPandas,
-    # never row-at-a-time BatchEvalPython
-    df = q.REGISTRY["q40_multimodal_features"].spark_fn(spark, SF)
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    p = buf.getvalue()
-    assert "MapInPandas" in p
-    assert "BatchEvalPython" not in p
-
-
 def test_ivf_assignment_is_narrow(spark):
     # centroid assignment must be a pure map over the corpus: the only
     # Exchange allowed is the single-row centroid collect_list aggregate —
@@ -1011,8 +999,8 @@ def test_q119_decontam_no_cartesian(spark):
 
 # Queries whose BroadcastNestedLoopJoin is INTENTIONAL: a deliberately
 # tiny broadcast side with no usable equi-key — either a 1-row scalar
-# frame joined back (corpus totals: q67/q75/q77/q78/q80/q81/q82/q110,
-# media stats q93), or the all-pairs scoring of a handful of centroids /
+# frame joined back (corpus totals: q67/q75/q77/q78/q80/q81/q82/q110),
+# or the all-pairs scoring of a handful of centroids /
 # query vectors that IS the algorithm (q27/q28 exact twins, q30/q116 IVF
 # probe ranking, q54 k-means argmax, q90 ADC). A BNLJ anywhere else is a
 # plan regression: add here ONLY with a justification like the above.
@@ -1029,7 +1017,6 @@ _BNLJ_INTENTIONAL = {
     "q81_perplexity_buckets",
     "q82_dsir_importance",
     "q90_ivf_pq",
-    "q93_media_text_match",
     "q110_heavy_hitters",
     "q116_knn_batch",
     "q123_copurchase",  # 1-row n_orders scalar joined back

@@ -3484,550 +3484,6 @@ def test_label_health_null_vote_counts_suspect(spark, tmp_path_factory):
     assert rep2[0]["n_suspect"] == 0 and rep2[0]["mean_cos_own"] > 0.99
 
 
-def test_media_neardup_gate_fold_equals_batch(spark, tmp_path_factory):
-    """Round 15 (VERDICT r14 #6) — the streaming media-ingest near-dup
-    gate: (a) folding the q169 image fixture in three interleaved
-    micro-batches emits, in union, EXACTLY the one-shot
-    hamming_band_pairs over the whole corpus (fold ≡ batch — cross-batch
-    pairs are found when the later side arrives, within-batch pairs by
-    the shared operator); (b) a committed redelivery changes neither the
-    index nor the pairs (marker idempotence); (c) the audio twin holds
-    the same invariant; (d) the maintained index equals the batch hash
-    run's band rows."""
-    import os
-
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-    from syntenybrowserv2_etl_spark.streaming import mediadedup as md
-
-    base = str(tmp_path_factory.mktemp("mediadedup"))
-
-    # polling the gate's output before any batch landed reads as zero
-    # pairs, not a path error
-    from syntenybrowserv2_etl_spark.streaming import mediadedup as md0
-
-    empty = md0.read_dup_pairs(spark, os.path.join(base, "never_written"))
-    assert empty.count() == 0
-    assert set(empty.columns) == {"media_id_a", "media_id_b", "hamming"}
-
-    def drive(kind, media, hash_fn, hcol):
-        state = os.path.join(base, f"state_{kind}")
-        pairs = os.path.join(base, f"pairs_{kind}")
-        # interleave clusters across batches: batch b gets media_id % 3 == b
-        for b in range(3):
-            batch = media.filter(F.col("media_id") % 3 == b)
-            md.media_neardup_fold_batch(
-                batch, b, state_path=state, pairs_path=pairs, kind=kind,
-                n_buckets=4,
-            )
-        got = {
-            (r["media_id_a"], r["media_id_b"], r["hamming"])
-            for r in md.read_dup_pairs(spark, pairs).collect()
-        }
-        hs = hash_fn(media)
-        want = {
-            (r["media_id_a"], r["media_id_b"], r["hamming"])
-            for r in mm.hamming_band_pairs(hs, "media_id", hcol).collect()
-        }
-        assert got == want and len(want) >= 48, (len(got), len(want))
-
-        # (d) index == batch band rows
-        idx = {
-            (r["bi"], r["bv"], r["media_id"], r["hsh"])
-            for r in md.read_media_index(spark, state).collect()
-        }
-        want_idx = {
-            (r["bi"], r["bv"], r["media_id"], r["hsh"])
-            for r in md._band_rows(
-                hs.select(
-                    "media_id", F.col(hcol).alias("hsh"), "b0", "b1", "b2", "b3"
-                )
-            ).collect()
-        }
-        assert idx == want_idx
-
-        # (b) committed redelivery: everything unchanged
-        md.media_neardup_fold_batch(
-            media.filter(F.col("media_id") % 3 == 1), 1,
-            state_path=state, pairs_path=pairs, kind=kind, n_buckets=4,
-        )
-        again = {
-            (r["media_id_a"], r["media_id_b"], r["hamming"])
-            for r in md.read_dup_pairs(spark, pairs).collect()
-        }
-        idx2 = {
-            (r["bi"], r["bv"], r["media_id"], r["hsh"])
-            for r in md.read_media_index(spark, state).collect()
-        }
-        assert again == got and idx2 == idx
-
-    drive(
-        "image",
-        mm.synthetic_neardup_png_media(spark, 16, 3),
-        mm.image_dhash,
-        "dhash",
-    )
-    drive(
-        "audio",
-        mm.synthetic_neardup_wav_media(spark, 16, 3),
-        mm.audio_envelope_hash,
-        "ahash",
-    )
-
-
-def test_media_neardup_gate_crash_mid_swap_replay(spark, tmp_path_factory):
-    """Round-15 review finding #1, pinned: a crash BETWEEN the swap's
-    two renames (live bucket displaced into _pre, staged replacement
-    waiting with __stagedone, marker lost) must not cost the batch's
-    pair file its cross pairs. The fix computes pairs inside the fold's
-    merge_fn — on this replay the fold resumes the swap WITHOUT
-    re-merging, so the complete pair file from the first attempt
-    survives; the pre-fix code re-probed the broken live tree (missing
-    the displaced bucket) and overwrote the pair file with that
-    bucket's cross pairs gone."""
-    import os
-    import shutil
-
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-    from syntenybrowserv2_etl_spark.streaming import mediadedup as md
-
-    base = str(tmp_path_factory.mktemp("mediadedup_crash"))
-    state = os.path.join(base, "state")
-    pairs = os.path.join(base, "pairs")
-    media = mm.synthetic_neardup_png_media(spark, 16, 3)
-    b0 = media.filter(F.col("media_id") % 2 == 0)
-    b1 = media.filter(F.col("media_id") % 2 == 1)
-    md.media_neardup_fold_batch(
-        b0, 0, state_path=state, pairs_path=pairs, kind="image", n_buckets=4
-    )
-    # snapshot a bucket's PRE-batch-1 content for the _pre archive
-    bucket = sorted(
-        d for d in os.listdir(state) if d.startswith("__kb=")
-    )[0]
-    pre_snap = os.path.join(base, "pre_snap")
-    shutil.copytree(os.path.join(state, bucket), pre_snap)
-    md.media_neardup_fold_batch(
-        b1, 1, state_path=state, pairs_path=pairs, kind="image", n_buckets=4
-    )
-    want_pairs = {
-        (r["media_id_a"], r["media_id_b"], r["hamming"])
-        for r in md.read_dup_pairs(spark, pairs).collect()
-    }
-    want_idx = {
-        (r["bi"], r["bv"], r["media_id"], r["hsh"])
-        for r in md.read_media_index(spark, state).collect()
-    }
-    assert want_pairs and len(want_pairs) >= 48
-    # crash state: bucket displaced into _pre, its post-merge (= current
-    # live) content staged with the sentinel, marker lost
-    staging = os.path.join(state, "_staging", "1")
-    os.makedirs(staging, exist_ok=True)
-    shutil.move(os.path.join(state, bucket), os.path.join(staging, bucket))
-    os.makedirs(os.path.join(staging, "__stagedone"), exist_ok=True)
-    pre_dir = os.path.join(state, "_pre", "1")
-    os.makedirs(pre_dir, exist_ok=True)
-    shutil.copytree(pre_snap, os.path.join(pre_dir, bucket))
-    shutil.rmtree(os.path.join(state, "_batches", "1"))
-    # redeliver batch 1 against the broken tree
-    md.media_neardup_fold_batch(
-        b1, 1, state_path=state, pairs_path=pairs, kind="image", n_buckets=4
-    )
-    got_pairs = {
-        (r["media_id_a"], r["media_id_b"], r["hamming"])
-        for r in md.read_dup_pairs(spark, pairs).collect()
-    }
-    got_idx = {
-        (r["bi"], r["bv"], r["media_id"], r["hsh"])
-        for r in md.read_media_index(spark, state).collect()
-    }
-    assert got_pairs == want_pairs
-    assert got_idx == want_idx
-    assert os.path.isdir(os.path.join(state, "_batches", "1"))
-    assert not os.path.exists(staging) and not os.path.exists(pre_dir)
-
-
-def _video_batch_pairs(spark, media):
-    """The one-shot q175 join shape over the whole corpus."""
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-
-    hs = (
-        mm.video_scene_changes(media)
-        .select("media_id", F.col("dhash").alias("fp"))
-        .distinct()
-    )
-    a = hs.select(F.col("media_id").alias("media_id_a"), "fp")
-    b = hs.select(F.col("media_id").alias("media_id_b"), "fp")
-    return (
-        a.join(b, "fp")
-        .filter(F.col("media_id_a") < F.col("media_id_b"))
-        .groupBy("media_id_a", "media_id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_shared"))
-    )
-
-
-def test_media_neardup_gate_video_fold_equals_batch(spark, tmp_path_factory):
-    """Round 16 (VERDICT r15 #3) — the gate's video leg: (a) folding the
-    q175 APNG fixture in three interleaved micro-batches yields, via
-    read_video_dup_pairs, EXACTLY the one-shot q175 join over the whole
-    corpus (fold ≡ batch at the (pair, fp) triple granularity); (b) a
-    committed redelivery changes neither the index nor the pairs; (c)
-    the maintained index equals the batch fingerprint rows; (d) an
-    unwritten pairs path reads as zero pairs with the q175 schema."""
-    import os
-
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-    from syntenybrowserv2_etl_spark.streaming import mediadedup as md
-
-    base = str(tmp_path_factory.mktemp("mediadedup_video"))
-    empty = md.read_video_dup_pairs(spark, os.path.join(base, "never"))
-    assert empty.count() == 0
-    assert set(empty.columns) == {"media_id_a", "media_id_b", "n_shared"}
-
-    media = mm.synthetic_neardup_apng_media(spark, 8, 3)
-    state = os.path.join(base, "state")
-    pairs = os.path.join(base, "pairs")
-    for b in range(3):
-        md.media_neardup_fold_batch(
-            media.filter(F.col("media_id") % 3 == b), b,
-            state_path=state, pairs_path=pairs, kind="video", n_buckets=4,
-        )
-    got = {
-        (r["media_id_a"], r["media_id_b"], r["n_shared"])
-        for r in md.read_video_dup_pairs(spark, pairs).collect()
-    }
-    want = {
-        (r["media_id_a"], r["media_id_b"], r["n_shared"])
-        for r in _video_batch_pairs(spark, media).collect()
-    }
-    # q175's fixture plants 8 clusters of 3 sharing their even frames
-    assert got == want and len(want) >= 24, (len(got), len(want))
-
-    idx = {
-        (r["fp"], r["media_id"])
-        for r in md.read_media_index(spark, state).collect()
-    }
-    want_idx = {
-        (r["fp"], r["media_id"])
-        for r in mm.video_scene_changes(media)
-        .select(F.col("dhash").alias("fp"), "media_id")
-        .distinct()
-        .collect()
-    }
-    assert idx == want_idx
-
-    # committed redelivery: everything unchanged
-    md.media_neardup_fold_batch(
-        media.filter(F.col("media_id") % 3 == 1), 1,
-        state_path=state, pairs_path=pairs, kind="video", n_buckets=4,
-    )
-    again = {
-        (r["media_id_a"], r["media_id_b"], r["n_shared"])
-        for r in md.read_video_dup_pairs(spark, pairs).collect()
-    }
-    idx2 = {
-        (r["fp"], r["media_id"])
-        for r in md.read_media_index(spark, state).collect()
-    }
-    assert again == got and idx2 == idx
-
-
-def test_media_neardup_gate_video_crash_mid_swap_replay(
-    spark, tmp_path_factory
-):
-    """The crash-mid-swap replay pin extended to the video leg: a crash
-    between the swap's two renames (bucket displaced into _pre, staged
-    replacement waiting with __stagedone, marker lost) must not cost the
-    batch's (a, b, fp) pair file its cross triples — the fold resumes
-    the swap WITHOUT re-merging, so the first attempt's complete pair
-    file survives and the replayed gate equals the unbroken run."""
-    import os
-    import shutil
-
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-    from syntenybrowserv2_etl_spark.streaming import mediadedup as md
-
-    base = str(tmp_path_factory.mktemp("mediadedup_video_crash"))
-    state = os.path.join(base, "state")
-    pairs = os.path.join(base, "pairs")
-    media = mm.synthetic_neardup_apng_media(spark, 8, 3)
-    b0 = media.filter(F.col("media_id") % 2 == 0)
-    b1 = media.filter(F.col("media_id") % 2 == 1)
-    md.media_neardup_fold_batch(
-        b0, 0, state_path=state, pairs_path=pairs, kind="video", n_buckets=4
-    )
-    bucket = sorted(
-        d for d in os.listdir(state) if d.startswith("__kb=")
-    )[0]
-    pre_snap = os.path.join(base, "pre_snap")
-    shutil.copytree(os.path.join(state, bucket), pre_snap)
-    md.media_neardup_fold_batch(
-        b1, 1, state_path=state, pairs_path=pairs, kind="video", n_buckets=4
-    )
-    want_pairs = {
-        (r["media_id_a"], r["media_id_b"], r["n_shared"])
-        for r in md.read_video_dup_pairs(spark, pairs).collect()
-    }
-    want_idx = {
-        (r["fp"], r["media_id"])
-        for r in md.read_media_index(spark, state).collect()
-    }
-    assert want_pairs and len(want_pairs) >= 24
-    staging = os.path.join(state, "_staging", "1")
-    os.makedirs(staging, exist_ok=True)
-    shutil.move(os.path.join(state, bucket), os.path.join(staging, bucket))
-    os.makedirs(os.path.join(staging, "__stagedone"), exist_ok=True)
-    pre_dir = os.path.join(state, "_pre", "1")
-    os.makedirs(pre_dir, exist_ok=True)
-    shutil.copytree(pre_snap, os.path.join(pre_dir, bucket))
-    shutil.rmtree(os.path.join(state, "_batches", "1"))
-    md.media_neardup_fold_batch(
-        b1, 1, state_path=state, pairs_path=pairs, kind="video", n_buckets=4
-    )
-    got_pairs = {
-        (r["media_id_a"], r["media_id_b"], r["n_shared"])
-        for r in md.read_video_dup_pairs(spark, pairs).collect()
-    }
-    got_idx = {
-        (r["fp"], r["media_id"])
-        for r in md.read_media_index(spark, state).collect()
-    }
-    assert got_pairs == want_pairs
-    assert got_idx == want_idx
-    assert os.path.isdir(os.path.join(state, "_batches", "1"))
-    assert not os.path.exists(staging) and not os.path.exists(pre_dir)
-
-
-def test_media_neardup_gate_stream_twin(spark, tmp_path_factory):
-    """The readStream twin converges to the same pairs + index as the
-    manual fold over the same files (availableNow, maxFilesPerTrigger=1
-    → one fold per file)."""
-    import os
-
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-    from syntenybrowserv2_etl_spark.streaming import mediadedup as md
-
-    base = str(tmp_path_factory.mktemp("mediadedup_stream"))
-    media = mm.synthetic_neardup_png_media(spark, 8, 3)
-    src = os.path.join(base, "src")
-    for b in range(2):
-        media.filter(F.col("media_id") % 2 == b).coalesce(1).write.mode(
-            "append"
-        ).parquet(src)
-    state = os.path.join(base, "state")
-    pairs = os.path.join(base, "pairs")
-    stream = (
-        spark.readStream.schema(media.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    md.media_neardup_stream(
-        stream, state, pairs, kind="image", n_buckets=4,
-        checkpoint=os.path.join(base, "ck"),
-    ).awaitTermination(120)
-    got = {
-        (r["media_id_a"], r["media_id_b"], r["hamming"])
-        for r in md.read_dup_pairs(spark, pairs).collect()
-    }
-    want = {
-        (r["media_id_a"], r["media_id_b"], r["hamming"])
-        for r in mm.hamming_band_pairs(
-            mm.image_dhash(media), "media_id", "dhash"
-        ).collect()
-    }
-    assert got == want and len(want) >= 24
-
-
-def test_media_neardup_gate_occupancy_guard(spark, tmp_path_factory, monkeypatch):
-    """Round 17 (VERDICT r16 #3): the streaming gate forwards the
-    band-occupancy guard the batch pair join got in round 16. Planted
-    skew (the batch test's fixture shape, accumulated ACROSS batches into
-    state): a hot (band, value) population that holds no true pairs, one
-    cool true pair split across batches, one hot-only true pair. Pins the
-    monotone sandwich from the docstring:
-
-      one-shot hamming_band_pairs(corpus, max_bucket)
-        ⊆ capped fold  ⊆  uncapped exact
-
-    with STRICT containment on both sides here: the fold emits the
-    early-arriving hot pair (its bucket was still under cap when the
-    later side arrived — pairs the one-shot capped run loses), and drops
-    the late-arriving one (bucket already hot in state — the documented
-    recall trade); a generous cap reproduces the exact uncapped fold ≡
-    batch invariant; max_bucket=0 and kind="video" + max_bucket are
-    refused. The decode stage is stubbed with planted hash rows (the
-    real decode feeding identical band rows is pinned by
-    test_media_neardup_gate_fold_equals_batch); the guard logic under
-    test is the fold's merge probe."""
-    import os
-
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-    from syntenybrowserv2_etl_spark.streaming import mediadedup as md
-
-    base = str(tmp_path_factory.mktemp("mediadedup_occ"))
-
-    def band_row(i, b0, b1, b2, b3):
-        h = (b3 << 48) | (b2 << 32) | (b1 << 16) | b0
-        if h >= 1 << 63:
-            h -= 1 << 64
-        return (i, h, b0, b1, b2, b3)
-
-    rows = []
-    # hot population: bands 0/1 identical across all 10, bands 2/3
-    # disjoint single bits -> pairwise Hamming 4, never true pairs
-    for i in range(10):
-        rows.append(band_row(i, 0xAAAA, 0xBBBB, 1 << i, 1 << (15 - i)))
-    # cool true pair, split across batches 0 and 1
-    rows.append(band_row(100, 0x1111, 0x2222, 0x3333, 0x4444))
-    rows.append(band_row(101, 0x1111, 0x2222, 0x3333, 0x4445))
-    # early hot pair: Hamming 2, only matching bands are the hot buckets,
-    # but BOTH sides arrive in batch 0 while the bucket is still cool
-    rows.append(band_row(200, 0xAAAA, 0xBBBB, 0x5555, 0x6666))
-    rows.append(band_row(201, 0xAAAA, 0xBBBB, 0x5554, 0x6667))
-    # late hot pair: the earlier side indexed, the later side arrives
-    # after the bucket went hot
-    rows.append(band_row(300, 0xAAAA, 0xBBBB, 0x7777, 0x0888))
-    rows.append(band_row(301, 0xAAAA, 0xBBBB, 0x7776, 0x0889))
-    hashes = spark.createDataFrame(
-        rows, "media_id long, hsh long, b0 long, b1 long, b2 long, b3 long"
-    )
-
-    # stub the decode stage: batches ARE hash rows (docstring)
-    monkeypatch.setattr(
-        md, "_hashes", lambda batch_df, kind: batch_df.select(
-            "media_id", "hsh", "b0", "b1", "b2", "b3"
-        )
-    )
-
-    batches = [
-        [200, 201, 300, 0, 1],        # hot bucket occupancy 5 <= 6: early
-        [2, 3, 4, 5, 6, 100],         # pair emitted before it goes hot
-        [7, 8, 9, 101, 301],          # bucket hot: late pair dropped
-    ]
-
-    def drive(tag, max_bucket):
-        state = os.path.join(base, f"state_{tag}")
-        pairs = os.path.join(base, f"pairs_{tag}")
-        for b, ids in enumerate(batches):
-            md.media_neardup_fold_batch(
-                hashes.filter(F.col("media_id").isin(ids)), b,
-                state_path=state, pairs_path=pairs, kind="image",
-                n_buckets=4, max_bucket=max_bucket,
-            )
-        return {
-            (r["media_id_a"], r["media_id_b"], r["hamming"])
-            for r in md.read_dup_pairs(spark, pairs).collect()
-        }
-
-    exact = {
-        (r["media_id_a"], r["media_id_b"], r["hamming"])
-        for r in mm.hamming_band_pairs(hashes, "media_id", "hsh").collect()
-    }
-    assert exact == {(100, 101, 1), (200, 201, 2), (300, 301, 2)}
-    oneshot_capped = {
-        (r["media_id_a"], r["media_id_b"], r["hamming"])
-        for r in mm.hamming_band_pairs(
-            hashes, "media_id", "hsh", max_bucket=6
-        ).collect()
-    }
-    assert oneshot_capped == {(100, 101, 1)}
-
-    capped_fold = drive("capped", 6)
-    # strict sandwich: early hot pair kept, late hot pair dropped
-    assert capped_fold == {(100, 101, 1), (200, 201, 2)}
-    assert oneshot_capped < capped_fold < exact
-
-    # generous cap: the exact fold ≡ batch invariant is untouched
-    assert drive("generous", 100) == exact
-    assert drive("uncapped", None) == exact
-
-    with pytest.raises(ValueError):
-        md.media_neardup_fold_batch(
-            hashes, 0, state_path=os.path.join(base, "s0"),
-            pairs_path=os.path.join(base, "p0"), max_bucket=0,
-        )
-    with pytest.raises(ValueError):
-        md.media_neardup_fold_batch(
-            hashes, 0, state_path=os.path.join(base, "s1"),
-            pairs_path=os.path.join(base, "p1"), kind="video", max_bucket=4,
-        )
-
-
-def test_media_neardup_gate_video_hamming_fold_equals_batch(
-    spark, tmp_path_factory
-):
-    """Round 17 (VERDICT r16 #4): the Hamming-tolerant video kind —
-    q178's streaming twin. Folding the q175 fixture in three interleaved
-    micro-batches yields, through read_video_hamming_pairs, EXACTLY the
-    one-shot video_neardup_hamming_pairs over the whole corpus (fold ≡
-    batch at combo granularity, on a fixture carrying real Hamming-1/2
-    cross-video near-misses beyond its exact collisions); a committed
-    redelivery changes nothing; radius > 2 is refused; a generous
-    occupancy cap changes nothing."""
-    import os
-
-    from syntenybrowserv2_etl_spark.operators import multimodal as mm
-    from syntenybrowserv2_etl_spark.streaming import mediadedup as md
-
-    base = str(tmp_path_factory.mktemp("mediadedup_vh"))
-    media = mm.synthetic_neardup_apng_media(spark, 8, 3)
-
-    want = {
-        (r["media_id_a"], r["media_id_b"]): r["n_near"]
-        for r in mm.video_neardup_hamming_pairs(media).collect()
-    }
-    # the tolerant radius must be exercised: strictly more combo mass
-    # than exact fingerprint sharing on this fixture
-    exact_total = sum(
-        r["n_shared"]
-        for r in queries.REGISTRY["q175_video_dedup"]
-        .spark_fn(spark, "/root/testdata/sf0.001")
-        .collect()
-    )
-    assert sum(want.values()) > exact_total
-
-    def drive(tag, max_bucket):
-        state = os.path.join(base, f"state_{tag}")
-        pairs = os.path.join(base, f"pairs_{tag}")
-        for b in range(3):
-            md.media_neardup_fold_batch(
-                media.filter(F.col("media_id") % 3 == b), b,
-                state_path=state, pairs_path=pairs, kind="video_hamming",
-                n_buckets=4, max_bucket=max_bucket,
-            )
-        return state, pairs, {
-            (r["media_id_a"], r["media_id_b"]): r["n_near"]
-            for r in md.read_video_hamming_pairs(spark, pairs).collect()
-        }
-
-    state, pairs, got = drive("plain", None)
-    assert got == want
-
-    # committed redelivery: a no-op for pairs
-    md.media_neardup_fold_batch(
-        media.filter(F.col("media_id") % 3 == 1), 1,
-        state_path=state, pairs_path=pairs, kind="video_hamming", n_buckets=4,
-    )
-    again = {
-        (r["media_id_a"], r["media_id_b"]): r["n_near"]
-        for r in md.read_video_hamming_pairs(spark, pairs).collect()
-    }
-    assert again == got
-
-    # generous occupancy cap: nothing hot at this scale, same result
-    assert drive("capped", 10_000)[2] == want
-
-    with pytest.raises(ValueError):
-        md.media_neardup_fold_batch(
-            media, 0, state_path=os.path.join(base, "s_r"),
-            pairs_path=os.path.join(base, "p_r"), kind="video_hamming",
-            max_hamming=3,
-        )
-
-    # polling before any batch reads as zero pairs
-    empty = md.read_video_hamming_pairs(spark, os.path.join(base, "nope"))
-    assert empty.count() == 0
-    assert set(empty.columns) == {"media_id_a", "media_id_b", "n_near"}
-
-
 def test_label_centroid_fold_lost_marker_detection(spark, tmp_path_factory):
     """embhealth's merge is an elementwise SUM — same worst-case
     non-idempotency as the drift monitor: a fully-committed batch whose

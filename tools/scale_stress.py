@@ -109,10 +109,6 @@ KNOWN_OPS = frozenset({
     "repeated_spans", "repeated_spans_hash", "roc_auc_binned",
     "excise_repeated", "shingle_fold",
     "label_noise_ivf", "quantile_grid", "oov_rate", "entropy_rate",
-    "image_dhash", "audio_ehash", "image_pair_join", "audio_pair_join",
-    "structured_pair_join",
-    "media_gate_fold", "media_gate_fold_video", "media_gate_fold_skew",
-    "jpeg_decode_stats", "apng_decode_stats",
     "embedding_collapse", "label_separation", "label_cohesion",
     "assoc_mi", "ks_drift", "kmv_overlap", "zipf_fit",
     "balanced_shards", "key_skew", "dist_psi", "ipf_reweight",
@@ -146,11 +142,6 @@ def main():
         "event_transitions", "transitions_apply", "merge_apply_skew",
         "interval_union", "jsonl_ingest", "pareto_skyline",
         "roc_auc", "rrf_fuse", "token_fold",
-        "image_dhash", "audio_ehash", "image_pair_join", "audio_pair_join",
-        "structured_pair_join",
-        "media_gate_fold", "media_gate_fold_video",
-        "media_gate_fold_skew",
-        "jpeg_decode_stats", "apng_decode_stats",
     }
     results = []
     for f in factors:
@@ -787,362 +778,6 @@ def main():
 
         if only is None or "interval_union" in only:
             _interval_union()
-
-        # round 14: perceptual image hashing (q169's primitive) — the
-        # decode+hash is map-only Arrow work, so cost must track rows
-        # linearly with no shuffle. 48 real PNG payloads built once
-        # driver-side, replicated f×16 in Spark with distinct ids
-        # (payload bytes identical per replica — per-image decode cost
-        # doesn't care; the pair join's growth is the LSH-band family's
-        # already-measured story, not re-measured here).
-        def _image_dhash():
-            from syntenybrowserv2_etl_spark.operators import multimodal as mmod
-
-            media48 = mmod.synthetic_neardup_png_media(spark, 16, 3)
-            reps16 = spark.range(16 * f).select(F.col("id").alias("rep"))
-            big = media48.crossJoin(reps16).select(
-                (F.col("media_id") + F.col("rep") * 48).alias("media_id"),
-                "kind", "payload", "width", "height", "duration_ms", "codec",
-            )
-            noop(mmod.image_dhash(big))
-
-        measure("image_dhash", _image_dhash)
-
-        def _audio_ehash():
-            from syntenybrowserv2_etl_spark.operators import multimodal as mmod
-
-            wav48 = mmod.synthetic_neardup_wav_media(spark, 16, 3)
-            reps16 = spark.range(16 * f).select(F.col("id").alias("rep"))
-            big = wav48.crossJoin(reps16).select(
-                (F.col("media_id") + F.col("rep") * 48).alias("media_id"),
-                "kind", "payload", "width", "height", "duration_ms", "codec",
-            )
-            noop(mmod.audio_envelope_hash(big))
-
-        measure("audio_ehash", _audio_ehash)
-
-        # round 15 (VERDICT r14 #3): the q169/q170 PAIR-JOIN stage's own
-        # growth curve — the hash primitives above are flat by
-        # construction (map-only); this measures the band-bucket join
-        # with planted cluster DENSITY held constant: 15·f clusters of 3
-        # near-dup copies each, so true pairs grow linearly (45·f) and
-        # any super-linear wall or candidate growth is a banding problem,
-        # not a data artifact. Clusters use HIGH-ENTROPY deterministic
-        # patterns (hash-mixed pixels/samples, planted identity via the
-        # operators' uniform-shift / integer-gain invariances) so band
-        # values are ~uniform across clusters — the q169 oracle fixture's
-        # linear-ramp patterns are pathologically band-collision-heavy
-        # (measured separately: candidates ~N^1.6 there; the LSH-family
-        # hot-bucket skew story, see SCALE.md). Hashes are
-        # pre-materialized untimed (their cost is the flat curves above);
-        # the timed region is candidates + Hamming filter, and the
-        # candidate/pair counts land in the JSON row — candidates ≈ pairs
-        # means the buckets prune to truth.
-        def _mix32(*parts):
-            v = 0x811C9DC5
-            for p in parts:
-                v = ((v ^ p) * 0x01000193) & 0xFFFFFFFF
-            v ^= v >> 15
-            v = (v * 0x2545F491) & 0xFFFFFFFF
-            return (v ^ (v >> 13)) & 0xFFFFFFFF
-
-        def _entropy_png_media(n_base, n_levels, base_off=0, id_off=0):
-            from syntenybrowserv2_etl_spark.operators import multimodal as mmod
-
-            rows = []
-            for i in range(n_base * n_levels):
-                b, delta = i % n_base, (i // n_base) * 2
-                w, h = 12 + b % 4, 9 + b % 3
-                pix = bytes(
-                    _mix32(b + base_off, x, y, c) % 240 + delta
-                    for y in range(h)
-                    for x in range(w)
-                    for c in range(3)
-                )
-                rows.append(
-                    (
-                        i + id_off,
-                        "image",
-                        mmod._png_encode(w, h, 3, pix),
-                        w,
-                        h,
-                        None,
-                        "png",
-                    )
-                )
-            return spark.createDataFrame(rows, schema=mmod.MEDIA_SCHEMA)
-
-        def _entropy_wav_media(n_base, n_gains):
-            import struct
-
-            from syntenybrowserv2_etl_spark.operators import multimodal as mmod
-
-            rows = []
-            for i in range(n_base * n_gains):
-                b, gain = i % n_base, 1 + i // n_base
-                n = 130 + b % 7
-                samples = [
-                    (_mix32(b, j) % 2000 - 1000) * gain for j in range(n)
-                ]
-                pcm = struct.pack(f"<{len(samples)}h", *samples)
-                fmt = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)
-                body = (
-                    b"WAVE" + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-                    + b"data" + struct.pack("<I", len(pcm)) + pcm
-                )
-                rows.append((
-                    i, "audio", b"RIFF" + struct.pack("<I", len(body)) + body,
-                    None, None, n * 1000 // 8000, "pcm",
-                ))
-            return spark.createDataFrame(rows, schema=mmod.MEDIA_SCHEMA)
-
-        # round 15: the two heaviest Python decode kernels (pure-stdlib
-        # JPEG Huffman+IDCT, APNG inflate+unfilter+compose) through the
-        # same replicate-payload harness as image_dhash — map-only
-        # Arrow work, so wall must track images linearly with no
-        # shuffle (per-image decode cost is payload-identical across
-        # replicas by construction).
-        def _jpeg_decode_stats():
-            from syntenybrowserv2_etl_spark.operators import multimodal as mmod
-
-            m40 = mmod.synthetic_jpeg420_media(spark, 40)
-            reps = spark.range(4 * f).select(F.col("id").alias("rep"))
-            big = m40.crossJoin(reps).select(
-                (F.col("media_id") + F.col("rep") * 40).alias("media_id"),
-                "kind", "payload", "width", "height", "duration_ms", "codec",
-            )
-            noop(mmod.image_stats(big))
-
-        measure("jpeg_decode_stats", _jpeg_decode_stats)
-
-        def _apng_decode_stats():
-            from syntenybrowserv2_etl_spark.operators import multimodal as mmod
-
-            m24 = mmod.synthetic_apng_media(spark, 24)
-            reps = spark.range(4 * f).select(F.col("id").alias("rep"))
-            big = m24.crossJoin(reps).select(
-                (F.col("media_id") + F.col("rep") * 24).alias("media_id"),
-                "kind", "payload", "width", "height", "duration_ms", "codec",
-            )
-            noop(mmod.video_frame_stats(big))
-
-        measure("apng_decode_stats", _apng_decode_stats)
-
-        # round 15: the streaming media gate's per-batch cost vs INDEX
-        # size — pre-grow the banded index to 45·f images (untimed),
-        # then time ONE constant 6-image batch fold (decode + bucket-
-        # pruned probe + pair write + state merge). The batch touches
-        # ≤ 24 of 64 buckets, so probe volume is (touched/64)·index:
-        # growth must stay well under the index's own 16×. At production
-        # n_buckets scales with the corpus (the family's sizing rule),
-        # keeping per-batch probe volume bounded regardless of index
-        # size.
-        def _media_gate_fold():
-            import shutil as _sh
-
-            from syntenybrowserv2_etl_spark.streaming import mediadedup as md
-
-            state = f"{SCRATCH}/mgate_state_x{f}"
-            pairs = f"{SCRATCH}/mgate_pairs_x{f}"
-            _sh.rmtree(state, ignore_errors=True)
-            _sh.rmtree(pairs, ignore_errors=True)
-            md.media_neardup_fold_batch(
-                _entropy_png_media(15 * f, 3),
-                0,
-                state_path=state,
-                pairs_path=pairs,
-                kind="image",
-                n_buckets=64,
-            )
-            batch = _entropy_png_media(2, 3, base_off=900_000, id_off=9_000_000)
-            r["media_gate_fold"] = timed(
-                lambda: md.media_neardup_fold_batch(
-                    batch,
-                    1,
-                    state_path=state,
-                    pairs_path=pairs,
-                    kind="image",
-                    n_buckets=64,
-                )
-            )
-
-        if only is None or "media_gate_fold" in only:
-            _media_gate_fold()
-
-        # round 16 (VERDICT r15 #3): the gate's VIDEO leg under the same
-        # discipline — pre-grow the frame-fingerprint index from 8·f
-        # videos (untimed), then time ONE constant 2-video batch fold
-        # (APNG decode + fingerprint-bucket-pruned probe + triple write
-        # + state merge). Per-batch cost is bounded by the batch's own
-        # fingerprints × bucket size, never O(index).
-        def _media_gate_fold_video():
-            import shutil as _sh
-
-            from syntenybrowserv2_etl_spark.operators import multimodal as mmod
-            from syntenybrowserv2_etl_spark.streaming import mediadedup as md
-
-            state = f"{SCRATCH}/mgate_video_state_x{f}"
-            pairs = f"{SCRATCH}/mgate_video_pairs_x{f}"
-            _sh.rmtree(state, ignore_errors=True)
-            _sh.rmtree(pairs, ignore_errors=True)
-            md.media_neardup_fold_batch(
-                mmod.synthetic_neardup_apng_media(spark, 8 * f, 3),
-                0,
-                state_path=state,
-                pairs_path=pairs,
-                kind="video",
-                n_buckets=64,
-            )
-            batch = mmod.synthetic_neardup_apng_media(spark, 2, 1).select(
-                (F.col("media_id") + 9_000_000).alias("media_id"),
-                "kind", "payload", "width", "height", "duration_ms", "codec",
-            )
-            r["media_gate_fold_video"] = timed(
-                lambda: md.media_neardup_fold_batch(
-                    batch,
-                    1,
-                    state_path=state,
-                    pairs_path=pairs,
-                    kind="video",
-                    n_buckets=64,
-                )
-            )
-
-        if only is None or "media_gate_fold_video" in only:
-            _media_gate_fold_video()
-
-        # round 17 (VERDICT r16 #3): the streaming gate's occupancy
-        # guard under skew-planted STATE — pre-grow the index from the
-        # STRUCTURED (linear-ramp) population whose band values
-        # concentrate (the ~N^1.6 batch-side blow-up fixture), then time
-        # ONE constant 2-image batch fold with and without
-        # max_bucket=8. Uncapped, the batch's probe of the hot
-        # accumulated buckets grows with the index; capped, per-batch
-        # probe volume is bounded by batch keys x 8 and the wall must
-        # stay flat across index growth.
-        def _media_gate_fold_skew():
-            import shutil as _sh
-
-            from syntenybrowserv2_etl_spark.operators import multimodal as mmod
-            from syntenybrowserv2_etl_spark.streaming import mediadedup as md
-
-            batch = mmod.synthetic_neardup_png_media(spark, 1, 2).select(
-                (F.col("media_id") + 9_000_000).alias("media_id"),
-                "kind", "payload", "width", "height", "duration_ms", "codec",
-            )
-            for tag, cap in (("capped", 8), ("uncapped", None)):
-                state = f"{SCRATCH}/mgate_skew_state_{tag}_x{f}"
-                pairs = f"{SCRATCH}/mgate_skew_pairs_{tag}_x{f}"
-                _sh.rmtree(state, ignore_errors=True)
-                _sh.rmtree(pairs, ignore_errors=True)
-                md.media_neardup_fold_batch(
-                    mmod.synthetic_neardup_png_media(spark, 15 * f, 3),
-                    0,
-                    state_path=state,
-                    pairs_path=pairs,
-                    kind="image",
-                    n_buckets=64,
-                    max_bucket=cap,
-                )
-                r[f"media_gate_fold_skew_{tag}"] = timed(
-                    lambda: md.media_neardup_fold_batch(
-                        batch,
-                        1,
-                        state_path=state,
-                        pairs_path=pairs,
-                        kind="image",
-                        n_buckets=64,
-                        max_bucket=cap,
-                    )
-                )
-                r[f"media_gate_fold_skew_{tag}_pairs"] = md.read_dup_pairs(
-                    spark, pairs
-                ).count()
-
-        if only is None or "media_gate_fold_skew" in only:
-            _media_gate_fold_skew()
-
-        def _media_pair_join(key, gen, hash_fn, hash_col):
-            from syntenybrowserv2_etl_spark.operators import multimodal as mmod
-
-            hs_path = f"{SCRATCH}/{key}_hashes_x{f}"
-            hash_fn(gen(15 * f, 3)).write.mode("overwrite").parquet(hs_path)
-            hs = spark.read.parquet(hs_path)
-            pairs = mmod.hamming_band_pairs(hs, "media_id", hash_col)
-            r[key] = timed(lambda: noop(pairs))
-            r[f"{key}_candidates"] = mmod.band_candidates(
-                hs, "media_id", hash_col
-            ).count()
-            r[f"{key}_pairs"] = pairs.count()
-
-        def _image_pair_join():
-            from syntenybrowserv2_etl_spark.operators import multimodal as mmod
-
-            _media_pair_join(
-                "image_pair_join", _entropy_png_media, mmod.image_dhash, "dhash"
-            )
-
-        def _audio_pair_join():
-            from syntenybrowserv2_etl_spark.operators import multimodal as mmod
-
-            _media_pair_join(
-                "audio_pair_join",
-                _entropy_wav_media,
-                mmod.audio_envelope_hash,
-                "ahash",
-            )
-
-        if only is None or "image_pair_join" in only:
-            _image_pair_join()
-        if only is None or "audio_pair_join" in only:
-            _audio_pair_join()
-
-        # round 16 (VERDICT r15 #2): the STRUCTURED (linear-ramp) fixture
-        # whose band values concentrate — previously measured ad hoc at
-        # ~N^1.6 candidates — now measured WITH the band-occupancy guard
-        # wired into the operator. max_bucket=8 (clusters are 3 copies;
-        # any bucket past ~2 cluster widths is structural collision mass,
-        # the same sizing rule as the LSH family's bucket cap). The
-        # capped candidate count must grow ~linearly while retained true
-        # pairs stay 45·f (occupancy-capped buckets only hold cross-base
-        # ramp collisions at these sizes).
-        def _structured_pair_join():
-            from syntenybrowserv2_etl_spark.operators import multimodal as mmod
-
-            hs_path = f"{SCRATCH}/structured_hashes_x{f}"
-            mmod.image_dhash(
-                mmod.synthetic_neardup_png_media(spark, 15 * f, 3)
-            ).write.mode("overwrite").parquet(hs_path)
-            hs = spark.read.parquet(hs_path)
-            r["structured_candidates"] = mmod.band_candidates(
-                hs, "media_id", "dhash"
-            ).count()
-            r["structured_pairs"] = mmod.hamming_band_pairs(
-                hs, "media_id", "dhash"
-            ).count()
-            capped = mmod.hamming_band_pairs(
-                hs, "media_id", "dhash", max_bucket=8
-            )
-            r["structured_pair_join"] = timed(lambda: noop(capped))
-            r["structured_capped_candidates"] = mmod.band_candidates(
-                hs, "media_id", "dhash", max_bucket=8
-            ).count()
-            r["structured_capped_pairs"] = capped.count()
-            occ = {
-                row["band"]: row
-                for row in mmod.band_occupancy_report(
-                    hs, "media_id", "dhash", max_bucket=8
-                ).collect()
-            }
-            r["structured_max_occupancy"] = max(
-                row["max_occupancy"] for row in occ.values()
-            )
-            r["structured_over_cap_pairs"] = sum(
-                row["over_cap_pairs"] for row in occ.values()
-            )
-
-        if only is None or "structured_pair_join" in only:
-            _structured_pair_join()
 
         # round 11: the single-pass JSONL ingest (r10 weak #2 fix) —
         # dump scaled f×, one validity-partitioned write job splitting
